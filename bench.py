@@ -189,10 +189,11 @@ def run_suite() -> None:
 # above — --ab is opt-in and spawns plain `python bench.py` children.
 
 
-def _suite_record(tree: Path, env: dict) -> dict:
+def _suite_record(tree: Path, env: dict, label: str) -> dict:
     """Run one full suite in ``tree`` as a subprocess; return the full
     record (read from the bench_last.json the child writes next to its
-    own bench.py — no stdout parsing, immune to tail truncation)."""
+    own bench.py — no stdout parsing, immune to tail truncation).
+    ``label`` names the tree in error messages."""
     marker = tree / "bench_last.json"
     if marker.exists():
         marker.unlink()
@@ -209,10 +210,22 @@ def _suite_record(tree: Path, env: dict) -> dict:
             f"tail: {proc.stdout.decode(errors='replace')[-500:]}"
         )
     with open(marker) as f:
-        return json.load(f)
+        rec = json.load(f)
+    # the A/B record reads these per query; a tree whose bench.py
+    # predates them must fail here, naming the ref, not as a KeyError
+    # deep in the pairing
+    for key in ("queries", "queries_first_eval"):
+        if key not in rec:
+            raise SystemExit(
+                f"--ab: the suite record from {label} has no {key!r} "
+                "key (its bench.py predates the A/B fields)"
+            )
+    return rec
 
 
 def run_ab(baseline_ref: str, rounds: int, out: str | None) -> None:
+    if rounds < 1:
+        raise SystemExit(f"--rounds must be >= 1, got {rounds}")
     repo = Path(__file__).resolve().parent
     worktree = Path(f"/tmp/bench_ab_{os.getpid()}")
     subprocess.run(
@@ -224,6 +237,7 @@ def run_ab(baseline_ref: str, rounds: int, out: str | None) -> None:
     env = dict(os.environ)
     try:
         pairs: list[tuple[dict, dict]] = []
+        order: list[str] = []
         for i in range(rounds):
             # COUNTERBALANCED order (B-A, A-B, B-A, ...): this host's
             # drift can degrade monotonically across a round, and a
@@ -232,10 +246,11 @@ def run_ab(baseline_ref: str, rounds: int, out: str | None) -> None:
             # fixed-order records disagreed with each other AND with
             # fine-grained interleaved mini-benches).
             first_base = i % 2 == 0
+            order.append("B-A" if first_base else "A-B")
             for is_base in (first_base, not first_base):
                 which = f"baseline ({baseline_ref})" if is_base else "head"
                 print(f"# ab round {i + 1}/{rounds}: {which}")
-                rec = _suite_record(worktree if is_base else repo, env)
+                rec = _suite_record(worktree if is_base else repo, env, which)
                 if is_base:
                     base = rec
                 else:
@@ -279,7 +294,7 @@ def run_ab(baseline_ref: str, rounds: int, out: str | None) -> None:
         "metric": "ab_paired",
         "baseline_ref": baseline_ref,
         "rounds": rounds,
-        "order": "B-A " * rounds,
+        "order": " ".join(order),
         "geomean_speedup_steady": round(geo, 3),
         "totals_base": [round(b["value"], 3) for b, _ in pairs],
         "totals_head": [round(h["value"], 3) for _, h in pairs],

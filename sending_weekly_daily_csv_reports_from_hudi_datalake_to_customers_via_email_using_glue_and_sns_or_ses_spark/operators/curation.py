@@ -165,6 +165,14 @@ def decontaminate_fuzzy(
     ``contamination_report``'s. Run the exact pass too: it is cheaper
     and catches verbatim leakage at any length.
 
+    Scale bound: with ``broadcast_eval=True`` the corpus stream is
+    hash-partitioned by doc id, so ONE partition holds all of a
+    document's shingles (one 16-byte row per distinct shingle) — fine
+    for web documents, a skew hazard only for book-length ones. With
+    ``broadcast_eval=False`` the join reshuffles by shingle hash
+    anyway, so that doc-id exchange is skipped (it would be pure extra
+    shuffle) and no partition needs a whole document.
+
     Returns ``(clean, report)``: surviving ``docs`` rows (schema
     unchanged) and (doc_id, matched_doc_id, jaccard) naming the
     strongest-matching eval doc per dropped row (max jaccard, min
@@ -238,7 +246,7 @@ def decontaminate_fuzzy(
     # (doc_id, h) rows — the same narrow-shuffle volume the MinHash
     # signature build pays, and far cheaper than per-doc interpreted
     # array surgery
-    corpus_sh = shingled(docs, "doc_id", pre_partition=True)
+    corpus_sh = shingled(docs, "doc_id", pre_partition=broadcast_eval)
     corpus_sizes = corpus_sh.groupBy("doc_id").agg(
         F.count("*").alias("n_a")
     )

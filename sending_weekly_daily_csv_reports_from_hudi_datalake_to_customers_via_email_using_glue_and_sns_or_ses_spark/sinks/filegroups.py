@@ -27,11 +27,9 @@ Layout::
                                   commit's full file-slice view — the
                                   Hudi timeline-instant + metadata-table
                                   FILES partition in one document)
-      log/c=<commit>/            (rows upserted in that commit — same
-                                  shape KeyedTable writes, so
-                                  sources/incremental.py reads both)
-      _latest                    (pointer file → current commit; the
-                                  flip is the commit point)
+      log/c=<commit>/, tombstones/c=<commit>/, replaces/, savepoints/,
+      _latest                    (the commit timeline shared with
+                                  KeyedTable — see below)
 
 Reads resolve a manifest, not a directory listing: ``snapshot()`` is
 the union of the manifest's referenced slices (one parquet multi-path
@@ -70,11 +68,16 @@ concurrent commit conflicts iff their bucket sets overlap (whole-table
 ops — overwrite, rename — conflict with everything). Disjoint writers
 both land: the merge re-reads the now-current manifest under the lock,
 so it rebases onto concurrent commits in other buckets automatically.
-Savepoint/restore/rollback (r11, VERDICT r10 #6) ride the manifest
-pointer: a savepoint pins its manifest's slice set against the
-cleaner, restore republishes an older manifest (one pointer flip —
-the same crash-safe commit point every write uses), rollback drops the
-trailing commit.
+
+The commit timeline — the ``_latest`` pointer flip as the one commit
+point, transactions, orphan reaping, replace markers, savepoints and
+restore/rollback, and the ``log/c=`` layout sources/incremental.py
+reads — is :class:`.timeline.Timeline`, shared with KeyedTable. This
+engine supplies its layout to it: the manifests as ``instants()``,
+manifests and slice versions as its extra orphan families, and a
+manifest isdir probe as ``_verify_reconstructable``. A savepoint
+therefore pins its manifest's slice set against the cleaner, and
+restore republishes an older manifest.
 
 Reference parity: generate_hudi_table.py:86-214 configures upsert by
 record key + precombine; this class honors the identical P1/P2 merge
@@ -87,21 +90,21 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import uuid
-from contextlib import contextmanager
-from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from ..sources.incremental import COMMIT_COL
-from .concurrency import CommitConflictError, LockAcquireTimeout
+from .concurrency import CommitConflictError
+from .timeline import (
+    Timeline,
+    _reap_beyond_pointer,
+    _reap_dirs_beyond_pointer,
+    _write_json_atomic,
+)
 from .upsert import (
     COMPOSITE_KEY_COL,
-    _merge_latest,
-    _merge_partial,
-    _write_json_atomic,
     cdc_window,
     with_composite_key,
 )
@@ -111,7 +114,7 @@ from .upsert import (
 BUCKET_COL = "_bucket"
 
 
-class BucketedTable:
+class BucketedTable(Timeline):
     def __init__(
         self,
         spark: SparkSession,
@@ -240,21 +243,11 @@ class BucketedTable:
             lock_provider=lock_provider,
         )
 
-    # -- commit timeline ------------------------------------------------
-    def _latest_path(self) -> str:
-        return os.path.join(self.root, "_latest")
-
-    def latest_commit(self) -> str | None:
-        try:
-            with open(self._latest_path()) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
-
+    # -- commit timeline layout -----------------------------------------
     def commits(self) -> list[str]:
         """Published commit ids, oldest first: manifest files at or
         below the pointer (a crashed writer's manifest beyond the
-        pointer is invisible, same rule as KeyedTable)."""
+        pointer is an orphan, see Timeline._rollback_failed)."""
         latest = self.latest_commit()
         if latest is None:
             return []
@@ -268,100 +261,20 @@ class BucketedTable:
         ]
         return sorted(c for c in out if c <= latest)
 
-    def _new_commit_id(self) -> str:
-        ts = datetime.now(timezone.utc).strftime("%Y%m%d%H%M%S%f")[:-3]
-        last = self.latest_commit()
-        if last is not None and ts <= last:
-            ts = str(int(last) + 1).zfill(len(ts))
-        return ts
-
-    def _publish(self, commit: str) -> None:
-        tmp = self._latest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(commit)
-        os.replace(tmp, self._latest_path())
-
-    # -- P9: transactions / conflict detection (r11, VERDICT r10 #1) ----
-    @contextmanager
-    def _txn(self):
-        """Commit-phase critical section — the KeyedTable._txn contract
-        on the manifest engine: single-writer mode (no lock provider)
-        skips locking but still reaps a crashed run's orphans; with a
-        provider, the conflict check, merge, slice writes, and pointer
-        flip all run under the table lock."""
-        if self.lock_provider is None:
-            self._rollback_failed()
-            self._refresh_bucket_count()
-            yield
-            return
-        if not self.lock_provider.try_lock(timeout_s=self.lock_timeout_s):
-            raise LockAcquireTimeout(
-                f"table lock not acquired within {self.lock_timeout_s}s"
-            )
-        try:
-            self._rollback_failed()
-            self._refresh_bucket_count()
-            yield
-        finally:
-            self.lock_provider.unlock()
-
-    def _rollback_failed(self) -> None:
-        """Lazy failed-write cleaning: anything beyond the published
-        ``_latest`` pointer is a crashed (or rolled-back) writer's
-        orphan by definition — manifests, slice versions, log dirs,
-        tombstones, replace markers, savepoints — plus abandoned
-        staging dirs. Runs inside the critical section: under the
-        table lock nothing beyond the pointer can be in-flight."""
-        latest = self.latest_commit()
-
-        def dead(c: str) -> bool:
-            return latest is None or c > latest
-
-        mdir = os.path.join(self.root, "manifests")
-        if os.path.isdir(mdir):
-            for n in os.listdir(mdir):
-                if n.endswith(".json") and not n.startswith(".") and dead(
-                    n[: -len(".json")]
-                ):
-                    try:
-                        os.remove(os.path.join(mdir, n))
-                    except FileNotFoundError:
-                        pass
+    def _reap_layout(self, latest: str | None) -> None:
+        """BucketedTable's beyond-pointer orphan families (the shared
+        rule: see Timeline._rollback_failed): manifests and slice
+        versions."""
+        _reap_beyond_pointer(os.path.join(self.root, "manifests"), latest)
         sdir = os.path.join(self.root, "slices")
         if os.path.isdir(sdir):
             for bname in os.listdir(sdir):
-                bdir = os.path.join(sdir, bname)
-                if not bname.startswith("b=") or not os.path.isdir(bdir):
-                    continue
-                for vname in os.listdir(bdir):
-                    if vname.startswith("v=") and dead(vname[2:]):
-                        shutil.rmtree(
-                            os.path.join(bdir, vname), ignore_errors=True
-                        )
-        for sub in ("log", "tombstones"):
-            d = os.path.join(self.root, sub)
-            if os.path.isdir(d):
-                for n in os.listdir(d):
-                    if n.startswith("c=") and dead(n.split("=", 1)[1]):
-                        shutil.rmtree(
-                            os.path.join(d, n), ignore_errors=True
-                        )
-        for d in (self._replace_marker_dir(), self._savepoint_dir()):
-            if os.path.isdir(d):
-                for n in os.listdir(d):
-                    if n.endswith(".json") and not n.startswith(".") and (
-                        dead(n[: -len(".json")])
-                    ):
-                        try:
-                            os.remove(os.path.join(d, n))
-                        except FileNotFoundError:
-                            pass
-        self._backfill_replace_markers()
-        staging = os.path.join(self.root, "_staging")
-        if os.path.isdir(staging):
-            shutil.rmtree(staging, ignore_errors=True)
+                if bname.startswith("b="):
+                    _reap_dirs_beyond_pointer(
+                        os.path.join(sdir, bname), "v=", latest
+                    )
 
-    def _refresh_bucket_count(self) -> None:
+    def _txn_begin(self) -> None:
         """Adopt the AUTHORITATIVE bucket count — the latest published
         manifest's (rescale_buckets changes it; a concurrent process's
         rescale, or a crash between a rescale's publish and its meta
@@ -455,7 +368,6 @@ class BucketedTable:
         col_stats: dict | None = None,
         touched: list[int] | None = None,
     ) -> None:
-        os.makedirs(os.path.join(self.root, "manifests"), exist_ok=True)
         doc = {
             "op": op,
             # the routing this commit's slices were written under —
@@ -484,10 +396,7 @@ class BucketedTable:
             # the file index — snapshot_where plans over in-range
             # slices from this one document, never probing footers
             doc["col_stats"] = col_stats
-        tmp = self._manifest_path(commit) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, self._manifest_path(commit))
+        _write_json_atomic(self._manifest_path(commit), doc)
 
     # -- key routing ----------------------------------------------------
     def _with_key(self, df: DataFrame) -> DataFrame:
@@ -549,16 +458,6 @@ class BucketedTable:
                 df = coalesce_renamed(df, priors)
             return df
         return self.spark.read.option("mergeSchema", "true").parquet(*paths)
-
-    # -- merge payload --------------------------------------------------
-    def _combine(self, versions: DataFrame) -> DataFrame:
-        if self.payload == "partial_update":
-            return _merge_partial(
-                versions, self.record_key, [COMMIT_COL, self.precombine]
-            )
-        return _merge_latest(
-            versions, self.record_key, self.precombine, prefer_col=COMMIT_COL
-        )
 
     # -- data-skipping indexes (r10, VERDICT r9 #5) -----------------------
     def _collect_slice_stats(
@@ -662,8 +561,7 @@ class BucketedTable:
         bucket. Returns the touched part of the new slice map (None for
         buckets left empty — partitionBy writes no dir for an empty
         partition, which is exactly the 'group is now empty' signal)."""
-        staging = os.path.join(self.root, "_staging", uuid.uuid4().hex)
-        (
+        out = (
             merged.withColumn(BUCKET_COL, self._bucket_expr())
             # ONE output file per file group: without the bucket
             # repartition, partitionBy fans each of the merge shuffle's
@@ -676,28 +574,24 @@ class BucketedTable:
             # same as KeyedTable snapshots) → row-group locality for
             # point lookups
             .sortWithinPartitions(BUCKET_COL, self.record_key)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(staging)
         )
-        out: dict[int, str | None] = {}
-        self._last_bytes_written = 0
-        for b in touched:
-            src = os.path.join(staging, f"{BUCKET_COL}={b}")
-            if os.path.isdir(src):
-                dst = self._slice_path(b, commit)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                shutil.rmtree(dst, ignore_errors=True)
-                os.rename(src, dst)
-                out[b] = commit
-                for f in os.listdir(dst):
-                    self._last_bytes_written += os.path.getsize(
-                        os.path.join(dst, f)
-                    )
-            else:
-                out[b] = None
-        shutil.rmtree(staging, ignore_errors=True)
-        return out
+        slice_of = {b: self._slice_path(b, commit) for b in touched}
+        moved = set(
+            self._staged_write(
+                lambda p: out.write.mode("overwrite")
+                .partitionBy(BUCKET_COL)
+                .parquet(p),
+                {f"{BUCKET_COL}={b}": dst for b, dst in slice_of.items()},
+            )
+        )
+        self._last_bytes_written = sum(
+            os.path.getsize(os.path.join(dst, f))
+            for dst in moved
+            for f in os.listdir(dst)
+        )
+        return {
+            b: commit if dst in moved else None for b, dst in slice_of.items()
+        }
 
     def _touched_buckets(
         self, keyed: DataFrame, n: int | None = None
@@ -737,11 +631,7 @@ class BucketedTable:
         # optimistic phase — no lock: combine the batch, route its keys
         base_instant = self.latest_commit()
         incoming = self._with_key(incoming)
-        deduped = (
-            _merge_partial(incoming, self.record_key, [self.precombine])
-            if self.payload == "partial_update"
-            else _merge_latest(incoming, self.record_key, self.precombine)
-        )
+        deduped = self._combine_batch(incoming)
         with self._txn():
             # routing depends only on the key SET, identical pre- and
             # post-dedupe — computed off the raw batch (narrow key-only
@@ -808,11 +698,7 @@ class BucketedTable:
         (and any in-flight writer conflicts with it)."""
         base_instant = self.latest_commit()
         incoming = self._with_key(incoming)
-        deduped = (
-            _merge_partial(incoming, self.record_key, [self.precombine])
-            if self.payload == "partial_update"
-            else _merge_latest(incoming, self.record_key, self.precombine)
-        )
+        deduped = self._combine_batch(incoming)
         with self._txn():
             touched = self._touched_buckets(incoming)
             # replace rewrites the WHOLE live state: any concurrent
@@ -911,12 +797,10 @@ class BucketedTable:
         dropped = existing.join(
             keyed, on=self.record_key, how="left_semi"
         ).select(self.record_key)
-        ts_path = os.path.join(self.root, "tombstones", f"c={commit}")
-        staging = os.path.join(self.root, "_staging", uuid.uuid4().hex)
-        dropped.write.mode("overwrite").parquet(staging)
-        os.makedirs(os.path.dirname(ts_path), exist_ok=True)
-        shutil.rmtree(ts_path, ignore_errors=True)
-        os.rename(staging, ts_path)
+        self._staged_write(
+            lambda p: dropped.write.mode("overwrite").parquet(p),
+            os.path.join(self.root, "tombstones", f"c={commit}"),
+        )
         self._write_manifest(
             commit,
             "delete",
@@ -966,14 +850,6 @@ class BucketedTable:
             )
         merged, _ = merge_widened_fields(prev.fields, incoming.fields)
         return StructType(merged)
-
-    def _write_log(self, df: DataFrame, commit: str) -> None:
-        path = os.path.join(self.root, "log", f"c={commit}")
-        staging = os.path.join(self.root, "_staging", uuid.uuid4().hex)
-        df.drop(COMMIT_COL).write.mode("overwrite").parquet(staging)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        shutil.rmtree(path, ignore_errors=True)
-        os.rename(staging, path)
 
     # -- read path ------------------------------------------------------
     def snapshot(self, as_of: str | None = None) -> DataFrame | None:
@@ -1417,36 +1293,6 @@ class BucketedTable:
         rail), via the shared :func:`..sinks.upsert.cdc_window`."""
         return cdc_window(self, begin, end, suppress_unchanged)
 
-    def _replace_marker_dir(self) -> str:
-        return os.path.join(self.root, "replaces")
-
-    def _record_replace_published(self, commit: str) -> None:
-        """POST-publish replace marker — the stream_cdc 'r' lane's
-        publish gate (see KeyedTable._record_replace_published)."""
-        _write_json_atomic(
-            os.path.join(self._replace_marker_dir(), f"{commit}.json"),
-            {"op": "overwrite"},
-        )
-
-    def _backfill_replace_markers(self) -> None:
-        """Repair the flip→marker crash window (and upgrade pre-r10
-        bucketed tables): every PUBLISHED overwrite manifest gets its
-        marker if missing. Idempotent, metadata-only."""
-        latest = self.latest_commit()
-        if latest is None:
-            return
-        rd = self._replace_marker_dir()
-        have = set()
-        if os.path.isdir(rd):
-            have = {
-                n[: -len(".json")]
-                for n in os.listdir(rd)
-                if n.endswith(".json") and not n.startswith(".")
-            }
-        for c, op in self._timeline_instants().items():
-            if op == "overwrite" and c <= latest and c not in have:
-                self._record_replace_published(c)
-
     # -- bucket rescale (r11) ---------------------------------------------
     def rescale_buckets(self, new_num_buckets: int) -> str | None:
         """Hudi bucket rescale: rewrite every live file group under a
@@ -1461,7 +1307,7 @@ class BucketedTable:
         * the manifest records the new count, which becomes the
           AUTHORITATIVE routing for later commits and reads —
           ``_table.json`` is updated post-publish as a cache, healed
-          by ``_refresh_bucket_count`` if a crash intervenes;
+          by ``_txn_begin`` if a crash intervenes;
         * time travel keeps working across the boundary for free: an
           old manifest pins both its slice set AND its own count
           (``read_keys(as_of=...)`` routes by the pinned count);
@@ -1525,10 +1371,7 @@ class BucketedTable:
             self._clean()
             return commit
 
-    # -- savepoint / restore / rollback (r11, VERDICT r10 #6) ------------
-    def _savepoint_dir(self) -> str:
-        return os.path.join(self.root, "savepoints")
-
+    # -- savepoint / restore support -------------------------------------
     def _verify_reconstructable(self, commit: str) -> None:
         """Raise (the retained-history message) unless every slice the
         commit's manifest references still exists — pure isdir probes,
@@ -1545,100 +1388,6 @@ class BucketedTable:
                     "(keep_versions) — raise keep_versions or read "
                     "within retained history"
                 )
-
-    def savepoint(
-        self, commit: str | None = None, name: str | None = None
-    ) -> str:
-        """Hudi savepoint on the manifest engine: pin a committed
-        instant so the cleaner never removes the slices needed to read
-        — or :meth:`restore` to — its state. Nearly free here: the
-        manifest already names the exact slice set, so pinning is one
-        JSON marker and the cleaner unions the pinned manifests'
-        references (no snapshot-dir copies, no delete-rail reasoning).
-        Defaults to the latest commit."""
-        with self._txn():
-            target = commit if commit is not None else self.latest_commit()
-            if target is None:
-                raise ValueError("cannot savepoint an empty table")
-            if target not in self.commits():
-                raise ValueError(f"unknown instant: {target!r}")
-            self._verify_reconstructable(target)
-            _write_json_atomic(
-                os.path.join(self._savepoint_dir(), f"{target}.json"),
-                {
-                    "name": name,
-                    "created_at": datetime.now(timezone.utc).isoformat(),
-                },
-            )
-            return target
-
-    def savepoints(self) -> dict[str, dict]:
-        """commit id → savepoint metadata (name, created_at)."""
-        sp = self._savepoint_dir()
-        if not os.path.isdir(sp):
-            return {}
-        out: dict[str, dict] = {}
-        for fname in os.listdir(sp):
-            if not fname.endswith(".json") or fname.startswith("."):
-                continue
-            with open(os.path.join(sp, fname)) as f:
-                out[fname[: -len(".json")]] = json.load(f)
-        return out
-
-    def delete_savepoint(self, commit: str) -> None:
-        """Unpin an instant; the next clean may collect its slices."""
-        try:
-            os.remove(os.path.join(self._savepoint_dir(), f"{commit}.json"))
-        except FileNotFoundError:
-            raise ValueError(f"no savepoint at instant {commit!r}") from None
-
-    def restore(self, commit: str) -> str:
-        """Hudi restore-to-instant: drop every commit after ``commit``.
-        After verifying the target manifest's slices survive, the ONLY
-        mutation is the ``_latest`` pointer flip — newer manifests,
-        slices, log/tombstone dirs, replace markers, and savepoints are
-        thereby reclassified as beyond-pointer orphans and reaped by
-        ``_rollback_failed`` (here, and lazily by every later
-        transaction). A crash leaves either the old table or the
-        restored one, never a torn state.
-
-        Caveat (same as Hudi and the KeyedTable form): downstream
-        incremental/CDC checkpoints that advanced past ``commit`` now
-        refer to removed history — their next read RAISES
-        (sources/incremental.CDCReader) and the consumer must reset
-        and re-seed."""
-        with self._txn():
-            latest = self.latest_commit()
-            if latest is None:
-                raise ValueError("cannot restore an empty table")
-            if commit not in self.commits():
-                raise ValueError(f"unknown instant: {commit!r}")
-            if commit == latest:
-                return commit
-            self._verify_reconstructable(commit)
-            self._publish(commit)
-            self._rollback_failed()
-            return commit
-
-    def rollback(self) -> str | None:
-        """Hudi rollback: undo the LATEST commit (restore to its
-        predecessor); rolling back the only commit empties the table.
-        Returns the new latest commit, or None when the table is now
-        (or was already) empty."""
-        with self._txn():
-            latest = self.latest_commit()
-            if latest is None:
-                return None
-            insts = self.commits()
-            if len(insts) >= 2:
-                prev = insts[-2]
-                self._verify_reconstructable(prev)
-                self._publish(prev)
-                self._rollback_failed()
-                return prev
-            os.remove(self._latest_path())
-            self._rollback_failed()
-            return None
 
     # -- maintenance ----------------------------------------------------
     def _clean(self) -> None:

@@ -27,6 +27,10 @@ Layout::
                                          the incremental/CDC stream)
       _latest                           (pointer file → current commit)
 
+The pointer, transactions, orphan reaping, replace markers, savepoints
+and restore/rollback are the commit timeline both engines share
+(:class:`.timeline.Timeline`); this module adds the snapshot layout.
+
 Scale notes: the merge is one shuffle of (existing ∪ incoming) keyed by
 record key — the same cost Hudi pays for a global-index upsert. At
 100 TB you'd partition by a key prefix / date so the union only rewrites
@@ -37,19 +41,21 @@ written ``partitionBy(partition_cols)`` so downstream reads prune.
 
 from __future__ import annotations
 
-import logging
 import json
 import os
 import shutil
-import uuid
-from contextlib import contextmanager
-from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.incremental import COMMIT_COL, read_commit_log
-from .concurrency import CommitConflictError, LockAcquireTimeout
+from .concurrency import CommitConflictError
+from .timeline import (
+    Timeline,
+    _reap_beyond_pointer,
+    _reap_dirs_beyond_pointer,
+    _write_json_atomic,
+)
 
 #: the derived composite-key meta column (the _hoodie_record_key
 #: analogue), materialized when ``record_key`` names several fields
@@ -281,38 +287,6 @@ def _conform_types(df: DataFrame, schema) -> DataFrame:
     )
 
 
-def _write_json_atomic(path: str, doc: dict) -> None:
-    """The engine's one crash-consistent small-file write idiom (r9
-    review: previously copy-pasted at every marker/schema/meta site):
-    dump to a dot-tmp sibling, then os.replace — readers see the old
-    doc or the new one, never a torn write."""
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = os.path.join(
-        os.path.dirname(path), "." + os.path.basename(path) + ".tmp"
-    )
-    with open(tmp, "w") as f:
-        json.dump(doc, f)
-    os.replace(tmp, path)
-
-
-def _reap_beyond_pointer(dirpath: str, latest: str | None) -> None:
-    """Remove every ``<commit>.json`` marker in ``dirpath`` whose
-    commit id is beyond the published pointer — a crashed writer's
-    orphan (the pointer flip is the commit point). Shared by the four
-    marker families _rollback_failed cleans (r9 review)."""
-    if not os.path.isdir(dirpath):
-        return
-    for name in os.listdir(dirpath):
-        if not name.endswith(".json") or name.startswith("."):
-            continue
-        c = name[: -len(".json")]
-        if latest is None or c > latest:
-            try:
-                os.remove(os.path.join(dirpath, name))
-            except OSError:
-                pass  # already gone: rollback is idempotent
-
-
 def cdc_window(
     table,
     begin: str | None = None,
@@ -507,7 +481,7 @@ def cdc_window(
     )
 
 
-class KeyedTable:
+class KeyedTable(Timeline):
     def __init__(
         self,
         spark: SparkSession,
@@ -660,17 +634,7 @@ class KeyedTable:
             meta = json.load(f)
         return cls(spark, root, lock_provider=lock_provider, **meta)
 
-    # -- timeline -------------------------------------------------------
-    def _latest_path(self) -> str:
-        return os.path.join(self.root, "_latest")
-
-    def latest_commit(self) -> str | None:
-        try:
-            with open(self._latest_path()) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
-
+    # -- timeline layout ------------------------------------------------
     def commits(self) -> list[str]:
         snap_dir = os.path.join(self.root, "snapshots")
         if not os.path.isdir(snap_dir):
@@ -693,14 +657,6 @@ class KeyedTable:
             | set(self.commits())
         )
         return sorted(c for c in seen if c <= latest)
-
-    def _new_commit_id(self) -> str:
-        # yyyyMMddHHmmssSSS, strictly increasing even for rapid commits
-        ts = datetime.now(timezone.utc).strftime("%Y%m%d%H%M%S%f")[:-3]
-        last = self.latest_commit()
-        if last is not None and ts <= last:
-            ts = str(int(last) + 1).zfill(len(ts))
-        return ts
 
     # -- composite key generator (late r7) ------------------------------
     def _with_key(self, df: DataFrame) -> DataFrame:
@@ -875,83 +831,17 @@ class KeyedTable:
             [f for f in log.schema.fields if f.name != COMMIT_COL]
         )
 
-    # -- P9: transactions / conflict detection --------------------------
-    @contextmanager
-    def _txn(self):
-        """Commit-phase critical section. Single-writer mode (no lock
-        provider) skips locking — the r1 behavior, near-zero overhead —
-        but still rolls back failed writes (a previous crashed run of
-        the same single writer can have left orphans)."""
-        if self.lock_provider is None:
-            self._rollback_failed()
-            yield
-            return
-        if not self.lock_provider.try_lock(timeout_s=self.lock_timeout_s):
-            raise LockAcquireTimeout(
-                f"table lock not acquired within {self.lock_timeout_s}s"
-            )
-        try:
-            self._rollback_failed()
-            yield
-        finally:
-            self.lock_provider.unlock()
-
-    def _rollback_failed(self) -> None:
-        """Lazy failed-write cleaning (Hudi pairs OCC with
-        hoodie.cleaner.policy.failed.writes=LAZY for exactly this):
-        a crashed writer leaves snapshot/log dirs — and, for deletes,
-        a timeline marker, written BEFORE the pointer flip so the
-        time-travel rail never misses a published delete — NEWER than
-        the published ``_latest`` pointer. The pointer flip is the
-        commit point, so anything beyond the pointer is by definition
-        an uncommitted write. Left in place those orphans would (a) be
-        classified by _check_conflict as completed whole-table commits,
-        wedging every later locked write in permanent
-        CommitConflictError, and (b) never be removed by _clean (they
-        are the newest dirs). Runs inside the critical section — under
-        the table lock no live writer can be mid-write, so anything
-        beyond the pointer is guaranteed dead, not in-flight."""
-        latest = self.latest_commit()
-        for c in self.commits():
-            if latest is None or c > latest:
-                shutil.rmtree(
-                    os.path.join(self.root, "snapshots", f"v={c}"),
-                    ignore_errors=True,
-                )
-        for c in self._log_commits():
-            if latest is None or c > latest:
-                shutil.rmtree(
-                    os.path.join(self.root, "log", f"c={c}"),
-                    ignore_errors=True,
-                )
-        ts_dir = os.path.join(self.root, "tombstones")
-        if os.path.isdir(ts_dir):
-            for d in os.listdir(ts_dir):
-                c = d.split("=", 1)[1] if "=" in d else None
-                if c is not None and (latest is None or c > latest):
-                    shutil.rmtree(
-                        os.path.join(ts_dir, d), ignore_errors=True
-                    )
-        # beyond-pointer marker families, one reap rule each: schema
-        # files (a crashed widening upsert's record would re-reject a
-        # legitimately retyped retry), timeline markers, replace
-        # markers (a restore moved the pointer back below a published
-        # overwrite), and savepoints (dangling after a restore removed
-        # the commit they pin). Published overwrites missing their
-        # replace marker (crash between the flip and the marker write)
-        # are then backfilled — see _record_replace_published.
-        for d in (
-            self._schema_dir(),
-            self._timeline_dir(),
-            self._replace_marker_dir(),
-            self._savepoint_dir(),
-        ):
+    # -- orphan reaping (the shared rule: see Timeline._rollback_failed)
+    def _reap_layout(self, latest: str | None) -> None:
+        """KeyedTable's beyond-pointer orphan families: snapshot dirs,
+        schema files (a crashed widening upsert's record would
+        re-reject a legitimately retyped retry) and timeline markers
+        (written before the flip, so a crashed delete leaves one)."""
+        _reap_dirs_beyond_pointer(
+            os.path.join(self.root, "snapshots"), "v=", latest
+        )
+        for d in (self._schema_dir(), self._timeline_dir()):
             _reap_beyond_pointer(d, latest)
-        self._backfill_replace_markers()
-        # abandoned staging dirs (crash mid-parquet-write)
-        staging = os.path.join(self.root, "_staging")
-        if os.path.isdir(staging):
-            shutil.rmtree(staging, ignore_errors=True)
 
     def _log_commits(self) -> list[str]:
         log_dir = os.path.join(self.root, "log")
@@ -961,52 +851,6 @@ class KeyedTable:
 
     def _timeline_dir(self) -> str:
         return os.path.join(self.root, "timeline")
-
-    def _replace_marker_dir(self) -> str:
-        return os.path.join(self.root, "replaces")
-
-    def _record_replace_published(self, commit: str) -> None:
-        """POST-publish replace marker (ADVICE r8 medium): the
-        streaming CDC source's 'r' lane reads THIS dir, not the
-        timeline — timeline markers are written BEFORE the pointer
-        flip (the time-travel rail needs that order), so a crashed,
-        never-published overwrite would otherwise stream a phantom 'r'
-        that makes replicas WIPE their state and apply the aborted
-        batch. A marker here exists only for overwrites at or below
-        the published pointer; the crash window between the flip and
-        this write is closed by :meth:`_backfill_replace_markers`
-        (every transaction start, and every stream open)."""
-        _write_json_atomic(
-            os.path.join(self._replace_marker_dir(), f"{commit}.json"),
-            {"op": "overwrite"},
-        )
-
-    def _backfill_replace_markers(self, timeline=None) -> None:
-        """Repair the flip→marker crash window (and upgrade pre-r9
-        tables): every PUBLISHED overwrite in the timeline gets its
-        post-publish replace marker if missing. Idempotent,
-        metadata-only; a marker backfilled late can reach a running
-        stream AFTER the commit's 'u' rows — consumers that cannot
-        tolerate a late 'r' (see stream_cdc) treat any 'r' as a
-        re-seed-from-snapshot signal, which is order-insensitive."""
-        latest = self.latest_commit()
-        if latest is None:
-            return
-        have = set()
-        rd = self._replace_marker_dir()
-        if os.path.isdir(rd):
-            have = {
-                n[: -len(".json")]
-                for n in os.listdir(rd)
-                if n.endswith(".json") and not n.startswith(".")
-            }
-        for c, op in (
-            timeline
-            if timeline is not None
-            else self._timeline_instants()
-        ).items():
-            if op == "overwrite" and c <= latest and c not in have:
-                self._record_replace_published(c)
 
     def _record_instant(
         self, commit: str, op: str, meta: dict | None = None
@@ -1601,21 +1445,6 @@ class KeyedTable:
         _commit_time — what sources/incremental.py reads."""
         return read_commit_log(self.spark, self.root)
 
-    def _combine(self, versions: DataFrame) -> DataFrame:
-        """The payload-dispatching cross-commit merge: given a union of
-        materialized state and/or stamped log rows, produce one live
-        row per key. overwrite = the P2 rule (larger precombine wins,
-        commit breaks ties toward the newer row); partial_update =
-        column-independent last-non-null in (commit, precombine) order
-        (see the ``payload`` attribute for why arrival order leads)."""
-        if self.payload == "partial_update":
-            return _merge_partial(
-                versions, self.record_key, [COMMIT_COL, self.precombine]
-            )
-        return _merge_latest(
-            versions, self.record_key, self.precombine, prefer_col=COMMIT_COL
-        )
-
     def cdc(
         self,
         begin: str | None = None,
@@ -1681,11 +1510,7 @@ class KeyedTable:
         # generate_hudi_table.py:119 semantics)
         base_instant = self.latest_commit()
         incoming = self._with_key(incoming)
-        deduped = (
-            _merge_partial(incoming, self.record_key, [self.precombine])
-            if self.payload == "partial_update"
-            else _merge_latest(incoming, self.record_key, self.precombine)
-        )
+        deduped = self._combine_batch(incoming)
 
         with self._txn():
             self._check_conflict(base_instant, deduped)
@@ -1824,11 +1649,7 @@ class KeyedTable:
         replication escape hatch is exactly that re-seed
         (``MaintainedAggregate.rebuild`` / a fresh replica seed)."""
         incoming = self._with_key(incoming)
-        deduped = (
-            _merge_partial(incoming, self.record_key, [self.precombine])
-            if self.payload == "partial_update"
-            else _merge_latest(incoming, self.record_key, self.precombine)
-        )
+        deduped = self._combine_batch(incoming)
         with self._txn():
             commit = self._new_commit_id()
             deduped = _conform_types(
@@ -2021,66 +1842,21 @@ class KeyedTable:
         finally:
             nets.unpersist()
 
-    # -- savepoint / restore / rollback (Hudi table lifecycle) ----------
-    def _savepoint_dir(self) -> str:
-        return os.path.join(self.root, "savepoints")
-
-    def savepoint(self, commit: str | None = None, name: str | None = None) -> str:
-        """Hudi savepoint: pin a committed instant so the cleaner (P6)
-        never removes the files needed to read — or :meth:`restore` to —
-        its state. Defaults to the latest commit. Keeping the newest
-        surviving snapshot ≤ the savepoint suffices: any delete in
-        (that snapshot, savepoint] would itself be a newer snapshot ≤
-        the savepoint, a contradiction — so the time-travel delete rail
-        can never fire inside a savepointed window."""
-        with self._txn():
-            target = commit if commit is not None else self.latest_commit()
-            if target is None:
-                raise ValueError("cannot savepoint an empty table")
-            if target not in self.instants():
-                raise ValueError(f"unknown instant: {target!r}")
-            # the instant must still be reconstructable NOW — the
-            # cleaner may already have eaten the history behind it
-            self._snapshot_as_of(target)
-            os.makedirs(self._savepoint_dir(), exist_ok=True)
-            tmp = os.path.join(self._savepoint_dir(), f".{target}.tmp")
-            with open(tmp, "w") as f:
-                json.dump(
-                    {
-                        "name": name,
-                        "created_at": datetime.now(timezone.utc).isoformat(),
-                    },
-                    f,
-                )
-            os.replace(
-                tmp, os.path.join(self._savepoint_dir(), f"{target}.json")
-            )
-            return target
-
-    def savepoints(self) -> dict[str, dict]:
-        """commit id → savepoint metadata (name, created_at)."""
-        sp = self._savepoint_dir()
-        if not os.path.isdir(sp):
-            return {}
-        out: dict[str, dict] = {}
-        for fname in os.listdir(sp):
-            if not fname.endswith(".json") or fname.startswith("."):
-                continue
-            with open(os.path.join(sp, fname)) as f:
-                out[fname[: -len(".json")]] = json.load(f)
-        return out
-
-    def delete_savepoint(self, commit: str) -> None:
-        """Unpin an instant; the next clean may collect its history."""
-        try:
-            os.remove(os.path.join(self._savepoint_dir(), f"{commit}.json"))
-        except FileNotFoundError:
-            raise ValueError(f"no savepoint at instant {commit!r}") from None
+    # -- savepoint / restore support -------------------------------------
+    def _verify_reconstructable(self, commit: str) -> None:
+        """Raise unless the state at ``commit`` can still be read: the
+        time-travel reconstruction itself, with its cleaned-delete
+        rail (see :meth:`snapshot`) — the cleaner may already have
+        eaten the history behind the instant."""
+        self._snapshot_as_of(commit)
 
     def _protected_commits(self) -> set[str]:
         """Snapshot commits the cleaner must keep: for each savepoint,
-        the newest surviving snapshot ≤ it (see :meth:`savepoint` for
-        why that alone makes the instant reconstructable forever)."""
+        the newest surviving snapshot ≤ it. That alone makes the
+        instant reconstructable forever: any delete in (that snapshot,
+        savepoint] would itself be a newer snapshot ≤ the savepoint, a
+        contradiction — so the time-travel delete rail can never fire
+        inside a savepointed window."""
         protected: set[str] = set()
         commits = self.commits()
         for sp in self.savepoints():
@@ -2088,81 +1864,6 @@ class KeyedTable:
             if base:
                 protected.add(base[-1])
         return protected
-
-    def restore(self, commit: str) -> str:
-        """Hudi restore-to-instant: drop every commit after ``commit``,
-        returning the table — snapshot reads, time travel, incremental
-        and CDC streams alike — to exactly its state at that instant.
-        Typically pointed at a :meth:`savepoint`.
-
-        Crash-safe by construction: after verifying the target is
-        reconstructable, the ONLY mutation is the ``_latest`` pointer
-        flip — the same commit point every write uses — which instantly
-        reclassifies all newer snapshots/log dirs/markers as
-        beyond-pointer orphans; ``_rollback_failed`` (run here and
-        lazily by every later transaction) physically removes them. A
-        crash at any point leaves either the old table or the restored
-        table, never a torn one.
-
-        Caveat (same as Hudi): downstream incremental checkpoints that
-        advanced past ``commit`` must be reset by the caller — commit
-        ids are time-based, so post-restore commits will normally sort
-        after the removed ones, but a checkpoint taken from a removed
-        commit refers to history that no longer exists."""
-        with self._txn():
-            latest = self.latest_commit()
-            if latest is None:
-                raise ValueError("cannot restore an empty table")
-            if commit not in self.instants():
-                raise ValueError(f"unknown instant: {commit!r}")
-            if commit == latest:
-                return commit
-            self._snapshot_as_of(commit)  # reconstructability rail
-            self._publish(commit)
-            self._rollback_failed()
-            return commit
-
-    def rollback(self) -> str | None:
-        """Hudi rollback: undo the LATEST commit (restore to its
-        predecessor). Rolling back the only commit empties the table
-        (pointer removed first — the same orphan-reclassification
-        commit point as :meth:`restore`). Returns the new latest
-        commit, or None when the table is now (or was already) empty."""
-        with self._txn():
-            latest = self.latest_commit()
-            if latest is None:
-                return None
-            insts = self.instants()
-            if len(insts) >= 2:
-                prev = insts[-2]
-                self._snapshot_as_of(prev)
-                self._publish(prev)
-                self._rollback_failed()
-                return prev
-            os.remove(self._latest_path())
-            self._rollback_failed()
-            return None
-
-    def _staged_write(self, write_fn, final_path: str) -> None:
-        """Stage a Spark directory write under root/_staging and move it
-        into place with one rename — readers (and the failed-write
-        scanner) never observe a half-written final dir. rename is
-        atomic on local FS/HDFS; on object stores the KeyedTable
-        emulation does not apply (use the real-Hudi passthrough
-        there)."""
-        staging = os.path.join(self.root, "_staging", uuid.uuid4().hex)
-        write_fn(staging)
-        os.makedirs(os.path.dirname(final_path), exist_ok=True)
-        shutil.rmtree(final_path, ignore_errors=True)  # overwrite semantics
-        os.rename(staging, final_path)
-        try:
-            os.rmdir(os.path.dirname(staging))  # drop the empty parent
-        except OSError as exc:
-            # best-effort tidy-up only: a concurrent writer may still be
-            # staging under the same parent — the commit already landed
-            logging.getLogger(__name__).debug(
-                "staging parent not removed (non-fatal): %s", exc
-            )
 
     def _write_snapshot(
         self, df: DataFrame, commit: str, presorted: bool = False
@@ -2186,19 +1887,6 @@ class KeyedTable:
             self._staged_write(
                 lambda p: df.write.mode("overwrite").parquet(p), path
             )
-
-    def _write_log(self, df: DataFrame, commit: str) -> None:
-        path = os.path.join(self.root, "log", f"c={commit}")
-        out = df.drop(COMMIT_COL)
-        self._staged_write(
-            lambda p: out.write.mode("overwrite").parquet(p), path
-        )
-
-    def _publish(self, commit: str) -> None:
-        tmp = self._latest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(commit)
-        os.replace(tmp, self._latest_path())
 
     def _clean(self) -> None:
         """P6 cleaner: KEEP_LATEST_FILE_VERSIONS over snapshot dirs.

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import re
 import sys
 from pathlib import Path
 
@@ -24,8 +25,12 @@ def pytest_collection_modifyitems(config, items):
     grading driver's verify window (VERDICT r11 #2: the full suite
     outgrew it at 53-61 min). Every gated sweep has shorter targeted
     siblings that stay in the default run; the gated set runs in the
-    builder's BASELINE sweeps and before each round close."""
+    builder's BASELINE sweeps and before each round close. A run that
+    selects the marker itself (``pytest -m slow``) asked for exactly
+    these sweeps, so it is not gated either."""
     if os.environ.get("SPARK_GRAFT_LONG_TESTS"):
+        return
+    if re.search(r"(?<!not )\bslow\b", config.option.markexpr or ""):
         return
     gate = pytest.mark.skip(
         reason="long-haul sweep; set SPARK_GRAFT_LONG_TESTS=1 to run"

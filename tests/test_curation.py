@@ -150,6 +150,20 @@ def test_decontaminate_fuzzy_catches_planted_paraphrase(spark):
     assert rep[3]["matched_doc_id"] == 100 and rep[3]["jaccard"] == 1.0
     assert clean.columns == train.columns
 
+    # broadcast_eval=False gives the same answer without the doc-id
+    # pre-partition: its join re-shuffles by shingle hash anyway
+    _, shuffled = decontaminate_fuzzy(
+        train, eval_docs, threshold=0.15, broadcast_eval=False
+    )
+    as_rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
+    assert as_rows(shuffled) == as_rows(report)
+
+    def plan(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    assert "RepartitionByExpression" in plan(report)
+    assert "RepartitionByExpression" not in plan(shuffled)
+
     # threshold validation guards the silent-drop-everything footgun
     with pytest.raises(ValueError, match="threshold"):
         decontaminate_fuzzy(train, eval_docs, threshold=0.0)

@@ -10,6 +10,9 @@ import pytest
 from sending_weekly_daily_csv_reports_from_hudi_datalake_to_customers_via_email_using_glue_and_sns_or_ses_spark import (
     fixtures,
 )
+from sending_weekly_daily_csv_reports_from_hudi_datalake_to_customers_via_email_using_glue_and_sns_or_ses_spark.sinks.filegroups import (
+    BucketedTable,
+)
 from sending_weekly_daily_csv_reports_from_hudi_datalake_to_customers_via_email_using_glue_and_sns_or_ses_spark.sinks.upsert import (
     KeyedTable,
 )
@@ -677,10 +680,14 @@ def test_occ_orphan_rolled_back_not_wedged(spark, tmp_path):
     assert t.snapshot().filter("created_at >= '2024-01-03'").count() == 10
 
 
-def test_staging_leftovers_cleaned(spark, tmp_path):
+@pytest.mark.parametrize(
+    "engine", [KeyedTable, BucketedTable], ids=["keyed", "bucketed"]
+)
+def test_staging_leftovers_cleaned(spark, tmp_path, engine):
     """A crash mid-parquet-write leaves only a _staging dir (never a
-    half-written final dir); the next transaction clears it."""
-    t = KeyedTable(
+    half-written final dir); the next transaction clears it. The reap
+    is the shared timeline's, so both engines must pass."""
+    t = engine(
         spark, str(tmp_path / "crash4"), record_key="customer_id",
         precombine="created_at",
     )
