@@ -13,7 +13,9 @@ run of the flagship query precedes timing.
 
 Cold vs warm (VERDICT r4 next-round #4): several operators share
 per-(session, sf) intermediates — the jaccard pair graph, the tf table,
-the approx-agg sketch, the IVF layout — so a query's SECOND evaluation
+the approx-agg sketch, the IVF layout — held by one mechanism,
+``operators.session_memo``, and released together by
+``operators.clear_intermediate_caches``; so a query's SECOND evaluation
 can be 10-20× its first. Both numbers are real: ``queries`` /
 ``value`` report STEADY STATE (min of two runs; the long-running
 cluster's behavior, and the comparable-across-rounds headline), while

@@ -15,6 +15,7 @@ Oracle-parity conventions (SURVEY.md §7.3d):
 
 from __future__ import annotations
 
+import atexit
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,75 +55,85 @@ def query(
     return deco
 
 
-def evict_dead_app_entries(registry: dict, app_id: str) -> None:
-    """Drop (and best-effort unpersist) cache entries whose key names a
-    DIFFERENT applicationId than the live one. The (applicationId, …)
-    keying keeps a restarted session from being served frames built by
-    a dead SparkContext — but without eviction, each restart's entries
-    would accumulate forever, pinning py4j references into dead JVMs.
-    Every cache getter calls this on miss, so at most one session's
-    entries are ever retained per cache."""
-    for key in [k for k in registry if k[0] != app_id]:
-        stale = registry.pop(key)
-        try:
-            stale.unpersist()
-        except Exception:  # noqa: BLE001 — dead context / non-frame value
-            pass
+def _unpersist(value) -> None:
+    # a frame, or a list of frames held as one value (the pair graph
+    # and its shingle index)
+    for frame in value if isinstance(value, list) else [value]:
+        if frame is not None:
+            frame.unpersist()
+
+
+def _release(value, release: Callable) -> None:
+    try:
+        release(value)
+    except Exception:  # noqa: BLE001 — dead context / non-frame value
+        pass
+
+
+#: the session memo: (applicationId, kind, key) -> (value, release)
+_MEMO: dict[tuple, tuple] = {}
+
+
+def session_memo(
+    spark: SparkSession,
+    kind: str,
+    key,
+    build: Callable,
+    release: Callable = _unpersist,
+):
+    """The one store for operator intermediates that are reused within a
+    session (pair graph, tf table, signatures, trained models, layout
+    dirs): return the value held for ``(applicationId, kind, key)``, or
+    call ``build()`` and hold its result. A ``None`` result is returned
+    but not held.
+
+    Keying on applicationId keeps a restarted session from being served
+    frames built by a dead SparkContext; every call also drops the
+    entries of any other applicationId and hands each to its
+    ``release`` (default: best-effort ``unpersist``), so at most one
+    session's entries are ever retained and none pins py4j references
+    into a dead JVM. ``clear_intermediate_caches`` releases them all."""
+    app = spark.sparkContext.applicationId
+    for stale in [k for k in _MEMO if k[0] != app]:
+        _release(*_MEMO.pop(stale))
+    full_key = (app, kind, key)
+    hit = _MEMO.get(full_key)
+    if hit is not None:
+        return hit[0]
+    value = build()
+    if value is not None:
+        _MEMO[full_key] = (value, release)
+    return value
+
+
+def _release_outside_jvm() -> None:
+    # at interpreter exit the JVM dies with the process, taking every
+    # persisted frame along; only releases that own something outside
+    # it (the IVF layout's temp dir) run, and no py4j call is made — the
+    # context may already be stopped and the gateway gone
+    for value, release in _MEMO.values():
+        if release is not _unpersist:
+            _release(value, release)
+    _MEMO.clear()
+
+
+atexit.register(_release_outside_jvm)
 
 
 def clear_intermediate_caches() -> None:
-    """Unpersist and forget the shared per-(session, sf) intermediates
-    (jaccard pair graph, tf table, approx-agg sketch, IVF centroids and
-    cell-partitioned layout path). Benchmarking helper: the headline
-    suite deliberately measures steady state (caches warm — a
+    """Release and forget every session-memo entry, plus the bounded
+    ``_window_postings`` persist ring. Benchmarking helper: the headline
+    suite deliberately measures steady state (memos warm — a
     long-running session's behavior), but SLOPE measurements
     (tools/scaling_bench.py, tools/gen_organic_sf.py) must time first
-    evaluations, or a cache hit would masquerade as a flat scaling
+    evaluations, or a memo hit would masquerade as a flat scaling
     curve."""
-    from . import aggregates, dedup, relational, similarity, textual
+    from .dedup import _POSTINGS_HANDLES
 
-    for registry in (
-        relational._FIXTURE_FRAME_CACHE,
-        dedup._PAIRS_CACHE,
-        dedup._PAIRS_SHINGLE_HANDLE,
-        dedup._MINHASH_SIG_CACHE,
-        dedup._SIMHASH_CHUNK_CACHE,
-        dedup._WINDOW_INDEX_CACHE,
-        textual._TF_CACHE,
-        aggregates._SKETCH_CACHE,
-    ):
-        for frame in registry.values():
-            try:
-                frame.unpersist()
-            except Exception:  # noqa: BLE001 — dead context: forget it
-                pass
-        registry.clear()
-    for frame in dedup._POSTINGS_HANDLES:  # list, not keyed — same idea
-        try:
-            frame.unpersist()
-        except Exception:  # noqa: BLE001 — dead context: forget it
-            pass
-    dedup._POSTINGS_HANDLES.clear()
-    # plain dicts (numpy matrices / layout paths) — nothing to unpersist
-    from . import pq
-
-    similarity._CENT_CACHE.clear()
-    similarity._QROWS_CACHE.clear()
-    pq._PQ_CACHE.clear()
-    from . import scoring
-
-    scoring._LM_CACHE.clear()
-    import logging
-    import shutil
-
-    for path in similarity._IVF_LAYOUT_CACHE.values():
-        try:
-            shutil.rmtree(path)
-        except OSError as exc:  # best-effort temp cleanup
-            logging.getLogger(__name__).debug(
-                "could not remove IVF layout dir %s: %s", path, exc
-            )
-    similarity._IVF_LAYOUT_CACHE.clear()
+    while _MEMO:
+        _release(*_MEMO.popitem()[1])
+    while _POSTINGS_HANDLES:  # never looked up: a persist budget only
+        _release(_POSTINGS_HANDLES.pop(), _unpersist)
 
 
 def _load_all() -> None:

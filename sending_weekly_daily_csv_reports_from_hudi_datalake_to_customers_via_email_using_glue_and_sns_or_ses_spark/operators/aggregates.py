@@ -18,10 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from . import query
-
-#: approx_aggregates' persisted sketch per sf_dir (see its docstring)
-_SKETCH_CACHE: dict[tuple[str, str], DataFrame] = {}
+from . import query, session_memo
 
 
 def _dec(col: str) -> F.Column:
@@ -145,23 +142,19 @@ def approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scanned three times; the cache keeps REPEAT invocations (bench
     # best-of-2, long driver sessions) from stacking a new
     # session-lifetime block per call
-    from . import evict_dead_app_entries
-
-    sk_key = (spark.sparkContext.applicationId, sf_dir)
-    evict_dead_app_entries(_SKETCH_CACHE, sk_key[0])
-    sketch = _SKETCH_CACHE.get(sk_key)
-    if sketch is None:
-        sketch = (
-            li.groupBy("l_returnflag")
-            .agg(
-                F.countDistinct("l_orderkey").alias("n_orders_exact"),
-                F.approx_count_distinct("l_orderkey", 0.02).alias("approx_orders"),
-                F.percentile_approx("l_extendedprice", 0.5, 10000).alias("p50_approx"),
-                F.percentile_approx("l_extendedprice", 0.95, 10000).alias("p95_approx"),
-            )
-            .persist()
+    sketch = session_memo(
+        spark,
+        "approx_sketch",
+        sf_dir,
+        lambda: li.groupBy("l_returnflag")
+        .agg(
+            F.countDistinct("l_orderkey").alias("n_orders_exact"),
+            F.approx_count_distinct("l_orderkey", 0.02).alias("approx_orders"),
+            F.percentile_approx("l_extendedprice", 0.5, 10000).alias("p50_approx"),
+            F.percentile_approx("l_extendedprice", 0.95, 10000).alias("p95_approx"),
         )
-        _SKETCH_CACHE[sk_key] = sketch
+        .persist(),
+    )
     ranks = (
         li.join(F.broadcast(sketch), "l_returnflag")
         .groupBy("l_returnflag")

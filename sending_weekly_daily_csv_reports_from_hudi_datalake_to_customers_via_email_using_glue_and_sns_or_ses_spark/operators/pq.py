@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.vector import cosine_similarity
+from . import session_memo
 from .similarity import (
     _QUERY_IDS,
     _probe_cells,
@@ -52,12 +53,6 @@ from .similarity import (
     _train_ivf_centroids,
     _ivf_cell_udf,
 )
-
-#: trained codebooks per (applicationId, corpus_id, m, ksub) — tiny
-#: numpy arrays (m·ksub·dsub floats), so a plain dict cache; evicted
-#: alongside the other similarity caches on app change.
-_PQ_CACHE: dict[tuple[str, str, int, int], np.ndarray] = {}
-
 
 def train_pq_codebooks(
     e: DataFrame,
@@ -77,14 +72,21 @@ def train_pq_codebooks(
     the same corpus are byte-identical, which is what lets tests pin
     recall and lets a production run re-derive the codebooks instead
     of versioning them.
-    """
-    from . import evict_dead_app_entries
 
-    key = (e.sparkSession.sparkContext.applicationId, corpus_id, m, ksub)
-    evict_dead_app_entries(_PQ_CACHE, key[0])
-    hit = _PQ_CACHE.get(key)
-    if hit is not None:
-        return hit
+    Memoized per (applicationId, corpus_id, m, ksub) — tiny numpy
+    arrays (m·ksub·dsub floats).
+    """
+    return session_memo(
+        e.sparkSession,
+        "pq_codebooks",
+        (corpus_id, m, ksub),
+        lambda: _train_codebooks(e, m, ksub, iters, emb_col, id_col),
+    )
+
+
+def _train_codebooks(
+    e: DataFrame, m: int, ksub: int, iters: int, emb_col: str, id_col: str
+) -> np.ndarray:
     sample = np.stack(
         [
             np.asarray(r[emb_col], dtype=np.float64)
@@ -126,7 +128,6 @@ def train_pq_codebooks(
                 if len(members):
                     cent[c] = members.mean(axis=0)
         books[j] = cent
-    _PQ_CACHE[key] = books
     return books
 
 

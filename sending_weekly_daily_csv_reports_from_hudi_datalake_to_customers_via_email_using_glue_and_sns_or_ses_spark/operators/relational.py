@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from . import query
+from . import query, session_memo
 
 
 @query(
@@ -660,33 +660,20 @@ def colstats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("k", "ship_ts", "price", "qty", "rf")
 
 
-#: persisted fixture frames shared ACROSS the three IVM replays
-#: (VERDICT r8 #4): the join, outer-join, and star entries replay the
-#: SAME star fixture, so their CDC windows and pinned snapshots are
-#: identical frames — computing each once per (applicationId, sf) and
-#: persisting it cuts the suite's first-eval replay cost by the reuse
-#: factor (the windows are the expensive part: log window functions
-#: over the 150k-row fact history, ×5 windows ×3 replays without the
-#: cache). Keys carry the table ROOT + instant token; values are
-#: persisted DataFrames (unpersisted by clear_intermediate_caches).
-_FIXTURE_FRAME_CACHE: dict[tuple, DataFrame] = {}
-
-
+# persisted fixture frames shared ACROSS the three IVM replays
+# (VERDICT r8 #4): the join, outer-join, and star entries replay the
+# SAME star fixture, so their CDC windows and pinned snapshots are
+# identical frames — computing each once per (applicationId, sf) and
+# persisting it cuts the suite's first-eval replay cost by the reuse
+# factor (the windows are the expensive part: log window functions
+# over the 150k-row fact history, ×5 windows ×3 replays without the
+# cache). Keys carry the table ROOT + instant token; values are
+# persisted DataFrames (unpersisted by clear_intermediate_caches).
 def _fixture_frame(spark, sf_dir, kind, root, token, build):
-    from . import evict_dead_app_entries
-
-    key = (
-        spark.sparkContext.applicationId, sf_dir, kind, root, token,
+    return session_memo(
+        spark, "fixture_frame", (sf_dir, kind, root, token),
+        lambda: None if (frame := build()) is None else frame.persist(),
     )
-    evict_dead_app_entries(_FIXTURE_FRAME_CACHE, key[0])
-    hit = _FIXTURE_FRAME_CACHE.get(key)
-    if hit is not None:
-        return hit
-    frame = build()
-    if frame is not None:
-        frame = frame.persist()
-        _FIXTURE_FRAME_CACHE[key] = frame
-    return frame
 
 
 def _fixture_cdc(spark, sf_dir, table, begin, end):

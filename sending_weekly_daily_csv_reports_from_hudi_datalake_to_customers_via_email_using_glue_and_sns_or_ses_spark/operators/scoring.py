@@ -45,7 +45,7 @@ from ..functions.text import (
     pii_hit_count,
     repetition_ratio,
 )
-from . import query
+from . import query, session_memo
 from .dedup import _shingle_array, _tokens
 
 #: default vocabulary cap: 2^16 types ≈ a BPE vocabulary's order of
@@ -210,13 +210,6 @@ def lm_score(
     )
 
 
-#: trained unigram LM per (applicationId, corpus id): the vocab literal
-#: frame (lineage-free by construction — _unigram_from_counts collects
-#: top-V and rebuilds a literal frame) plus the stats dict. Cleared by
-#: clear_intermediate_caches.
-_LM_CACHE: dict[tuple[str, str], tuple] = {}
-
-
 @query(
     "lm_perplexity",
     oracle=r"""
@@ -269,16 +262,15 @@ def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # invocations skip the training scan's two driver jobs; the same
     # lifetime class as the IVF centroid memo (r12, VERDICT r11 #7's
     # pattern applied to the LM lane). Scoring still scans the corpus
-    # every call.
-    from . import evict_dead_app_entries
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    evict_dead_app_entries(_LM_CACHE, key[0])
-    hit = _LM_CACHE.get(key)
-    if hit is None:
-        hit = train_unigram_lm(docs, vocab_size=50, smoothing_k=0.5)
-        _LM_CACHE[key] = hit
-    vocab, stats = hit
+    # every call. The memo holds the vocab literal frame
+    # (lineage-free by construction — _unigram_from_counts collects
+    # top-V and rebuilds a literal frame) plus the stats dict.
+    vocab, stats = session_memo(
+        spark,
+        "unigram_lm",
+        sf_dir,
+        lambda: train_unigram_lm(docs, vocab_size=50, smoothing_k=0.5),
+    )
     s = lm_score(docs, vocab, stats["oov_logp"])
     return s.select(
         "doc_id",

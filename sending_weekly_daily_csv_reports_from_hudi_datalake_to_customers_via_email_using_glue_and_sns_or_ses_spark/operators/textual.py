@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from . import query
+from . import query, session_memo
 
 #: tiny stopword marker sets for the language-ID heuristic (public
 #: common-word lists; intentionally minimal — the heuristic, not the
@@ -73,12 +73,6 @@ def quality_sql(c: str = "text") -> str:
 # token stream can never desynchronize from the dedup family (they are
 # documented as the same key; a local copy would drift silently)
 from .dedup import _norm_text, _tokens  # noqa: E402
-
-#: tf_idf's persisted (doc, tok, tf) table per (applicationId, sf_dir)
-#: (see its docstring). Keyed like dedup._PAIRS_CACHE: a DataFrame is
-#: only valid inside the SparkContext that built it, so a restarted
-#: session must miss rather than be served frames from a dead context.
-_TF_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 @query(
@@ -263,18 +257,14 @@ def tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached per (applicationId, sf_dir) so repeat invocations reuse
     # one persisted tf table instead of pinning a new session-lifetime
     # copy per call
-    from . import evict_dead_app_entries
-
-    tf_key = (spark.sparkContext.applicationId, sf_dir)
-    evict_dead_app_entries(_TF_CACHE, tf_key[0])
-    tf = _TF_CACHE.get(tf_key)
-    if tf is None:
-        tf = (
-            toks.groupBy("doc_id", "tok")
-            .agg(F.count("*").alias("tf"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        _TF_CACHE[tf_key] = tf
+    tf = session_memo(
+        spark,
+        "tf_table",
+        sf_dir,
+        lambda: toks.groupBy("doc_id", "tok")
+        .agg(F.count("*").alias("tf"))
+        .persist(StorageLevel.MEMORY_AND_DISK),
+    )
     # df derives from tf (one row per (doc, tok) ⇒ count(*) per tok ==
     # countDistinct(doc)), NOT from a second explode of the corpus —
     # saves a full tokenize+explode pass and shuffles the already-

@@ -16,6 +16,8 @@ from sending_weekly_daily_csv_reports_from_hudi_datalake_to_customers_via_email_
 from sending_weekly_daily_csv_reports_from_hudi_datalake_to_customers_via_email_using_glue_and_sns_or_ses_spark.operators import (
     QUERIES,
     RETIRED_QUERIES,
+    clear_intermediate_caches,
+    session_memo,
 )
 from sending_weekly_daily_csv_reports_from_hudi_datalake_to_customers_via_email_using_glue_and_sns_or_ses_spark.operators.dedup import (
     dedup_ngram_jaccard,
@@ -440,7 +442,6 @@ def test_ivf_centroid_cache_keyed_by_corpus(spark, tmp_path):
     import numpy as np
 
     from sending_weekly_daily_csv_reports_from_hudi_datalake_to_customers_via_email_using_glue_and_sns_or_ses_spark.operators.similarity import (
-        _CENT_CACHE,
         _train_ivf_centroids,
     )
     from pyspark.sql import functions as F
@@ -456,9 +457,13 @@ def test_ivf_centroid_cache_keyed_by_corpus(spark, tmp_path):
     e2 = load_table(spark, str(tmp_path), "embeddings")
     cent2 = _train_ivf_centroids(e2, K=8, corpus_id=str(tmp_path))
 
-    app = spark.sparkContext.applicationId
-    assert (app, SF, 8) in _CENT_CACHE
-    assert (app, str(tmp_path), 8) in _CENT_CACHE
+    # each corpus holds its own entry: a memo lookup whose build
+    # returns None (and so holds nothing) finds the held matrix
+    held = lambda corpus_id: session_memo(  # noqa: E731
+        spark, "ivf_centroids", (corpus_id, 8), lambda: None
+    )
+    assert held(SF) is cent1
+    assert held(str(tmp_path)) is cent2
     assert not np.allclose(cent1, cent2)
     # repeat call on corpus 1 is a memo HIT (identity), not a retrain
     assert _train_ivf_centroids(e1, K=8, corpus_id=SF) is cent1
@@ -488,25 +493,72 @@ def test_ivf_probe_warm_job_budget(spark):
     assert n <= 6, f"warm IVF probe ran {n} jobs (budget 6)"
 
 
-def test_dead_app_cache_entries_evicted(spark):
-    """Cache getters must drop entries keyed by a dead applicationId on
-    miss — otherwise every session restart leaks a full entry set
-    pinning py4j references into the dead JVM."""
-    from sending_weekly_daily_csv_reports_from_hudi_datalake_to_customers_via_email_using_glue_and_sns_or_ses_spark.operators import (
-        textual,
+@pytest.mark.parametrize("memo", ["tf_idf", "ivf_layout"])
+def test_dead_app_cache_entries_evicted(spark, tmp_path, memo):
+    """A memo call must drop and release the entries keyed by a dead
+    applicationId — otherwise every session restart leaks a full entry
+    set: persisted frames pinning py4j references into the dead JVM
+    (the tf table must be unpersisted) and temp dirs on disk (the IVF
+    layout's dir must be removed)."""
+    import shutil
+    from types import SimpleNamespace
+
+    dead = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="dead-app-id"))
+    if memo == "tf_idf":
+
+        class FakeFrame:
+            unpersisted = False
+
+            def unpersist(self):
+                self.unpersisted = True
+
+        fake = FakeFrame()
+        session_memo(dead, "tf_table", "some/sf", lambda: fake)
+        released = lambda: fake.unpersisted  # noqa: E731
+        entry = "tf_idf"
+    else:
+        stale = tmp_path / "ivf_cells_stale"
+        stale.mkdir()
+        session_memo(
+            dead, "ivf_layout", "some/sf", lambda: str(stale), release=shutil.rmtree
+        )
+        released = lambda: not stale.exists()  # noqa: E731
+        entry = "knn_approx_ivf"
+    assert not released()
+    QUERIES[entry](spark, SF).count()
+    assert released()
+
+
+def test_clear_intermediate_caches_releases_every_memo(spark):
+    """Slope tools time first evaluations through
+    clear_intermediate_caches, so it must release every memo entry: a
+    held one would pass for a flat curve. After warming four memo-backed
+    entries and clearing, the JVM holds no more persisted RDDs than
+    before the warm-up, the IVF layout dir is gone, and the centroid
+    memo trains anew."""
+    import os
+
+    from sending_weekly_daily_csv_reports_from_hudi_datalake_to_customers_via_email_using_glue_and_sns_or_ses_spark.operators.similarity import (
+        _ivf_layout,
+        _train_ivf_centroids,
     )
 
-    class FakeFrame:
-        unpersisted = False
+    jsc = spark.sparkContext._jsc
+    persisted = lambda: jsc.getPersistentRDDs().size()  # noqa: E731
+    clear_intermediate_caches()
+    before = persisted()
+    for name in ("tf_idf", "dedup_minhash_lsh", "lm_perplexity", "knn_approx_ivf"):
+        QUERIES[name](spark, SF).write.format("noop").mode("overwrite").save()
+    e = load_table(spark, SF, "embeddings")
+    cent = _train_ivf_centroids(e, K=8, corpus_id=SF)
+    layout = _ivf_layout(spark, SF)  # a hit: knn_approx_ivf wrote it
+    assert persisted() > before
+    assert os.path.isdir(layout)
 
-        def unpersist(self):
-            self.unpersisted = True
-
-    fake = FakeFrame()
-    textual._TF_CACHE[("dead-app-id", "some/sf")] = fake
-    QUERIES["tf_idf"](spark, SF).count()
-    assert ("dead-app-id", "some/sf") not in textual._TF_CACHE
-    assert fake.unpersisted
+    clear_intermediate_caches()
+    assert persisted() <= before
+    assert not os.path.exists(layout)
+    assert _train_ivf_centroids(e, K=8, corpus_id=SF) is not cent
 
 
 def test_cc_edge_layout_joins_without_edge_shuffle(spark):
@@ -1946,12 +1998,12 @@ def test_embed_media_bridges_into_ann_stack(spark):
     )
     # the bridge: PQ codebooks train on it and encode it — media rows
     # are now first-class citizens of the ANN stack
-    pq._PQ_CACHE.clear()
+    clear_intermediate_caches()
     books = pq.train_pq_codebooks(
         e.withColumnRenamed("media_id", "vec_id"), m=8, ksub=16,
         corpus_id="media#bridge",
     )
-    pq._PQ_CACHE.clear()
+    clear_intermediate_caches()
     coded = pq.pq_encode(e, books)
     got = coded.filter(F.col("pq_code").isNotNull()).limit(5).collect()
     assert all(len(r["pq_code"]) == 8 for r in got)

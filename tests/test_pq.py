@@ -16,6 +16,7 @@ from sending_weekly_daily_csv_reports_from_hudi_datalake_to_customers_via_email_
 )
 from sending_weekly_daily_csv_reports_from_hudi_datalake_to_customers_via_email_using_glue_and_sns_or_ses_spark.operators import (
     QUERIES,
+    clear_intermediate_caches,
 )
 from sending_weekly_daily_csv_reports_from_hudi_datalake_to_customers_via_email_using_glue_and_sns_or_ses_spark.operators import (
     pq,
@@ -36,7 +37,7 @@ def _recall(exact: pd.DataFrame, got: pd.DataFrame) -> float:
 def test_codebooks_deterministic_and_shaped(spark):
     e = load_table(spark, SF, "embeddings")
     b1 = pq.train_pq_codebooks(e, m=8, ksub=16, corpus_id=SF)
-    pq._PQ_CACHE.clear()
+    clear_intermediate_caches()
     b2 = pq.train_pq_codebooks(e, m=8, ksub=16, corpus_id=SF)
     assert b1.shape == (8, 16, 8)
     assert np.array_equal(b1, b2)
@@ -143,9 +144,9 @@ def test_zero_vector_in_sample_does_not_poison_codebooks(spark):
             F.array(*[F.lit(0.0).cast("float")] * 64),
         ).otherwise(F.col("embedding")),
     )
-    pq._PQ_CACHE.clear()
+    clear_intermediate_caches()
     books = pq.train_pq_codebooks(e, m=8, ksub=16, corpus_id=SF + "#z")
-    pq._PQ_CACHE.clear()
+    clear_intermediate_caches()
     assert np.isfinite(books).all()
 
 
@@ -335,16 +336,11 @@ def test_pq_auto_refine_holds_recall_at_x10(spark):
     sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from tools.gen_organic_sf import build_organic
 
-    from sending_weekly_daily_csv_reports_from_hudi_datalake_to_customers_via_email_using_glue_and_sns_or_ses_spark.operators import (
-        clear_intermediate_caches,
-    )
-
     sf1 = build_organic(spark, 1)
     sf10 = build_organic(spark, 10)
 
     def recall_at(sf_dir, refine):
         clear_intermediate_caches()
-        pq._PQ_CACHE.clear()
         exact = QUERIES["knn_bruteforce"](spark, sf_dir).toPandas()
         got = pq.ivf_pq_topk(spark, sf_dir, refine=refine).toPandas()
         return _recall(exact, got)
