@@ -855,6 +855,91 @@ _JOIN_IVM_ORACLE = """
     """
 
 
+def _join_view(spark, path: str, how: str = "inner"):
+    """The maintained (fact ⋈ cust) view every join entry replays or
+    streams into: the star fixture's first dimension as the 2-table
+    join."""
+    from .ivm import MaintainedJoinAggregate
+
+    return MaintainedJoinAggregate(
+        spark, path, on=("ck", "ck"),
+        group_cols=["seg"], sum_cols=["price"],
+        minmax_cols=["price"], distinct_cols=["ck"],
+        how=how,
+    )
+
+
+def _replayed_join_view(
+    spark: SparkSession, sf_dir: str, how: str, built: dict, name: str
+):
+    """The (fact, cust) join view replayed window-pair by window-pair
+    over the star fixture, with ``how`` join semantics — built once
+    and read on every later call: the production shape (maintain per
+    window, read many times) and the honest steady state, since
+    re-running the full 5-pair replay per invocation would benchmark
+    view CONSTRUCTION forever, never the maintained read it exists to
+    make cheap. The built view persists in the cross-process fixture
+    cache under ``views/<name>`` (r10, VERDICT r9 #4), so a fresh
+    session re-opens it; ``built`` maps sf_dir → path within this
+    process."""
+    from ..sinks.upsert import KeyedTable
+
+    cached = built.get(sf_dir)
+    if cached is not None and os.path.isdir(cached):
+        return _join_view(spark, cached, how)
+    f_root, d_root, _ = _star_cdc_fixture(spark, sf_dir)
+    fact = KeyedTable.open(spark, f_root)
+    dim = KeyedTable.open(spark, d_root)
+    target = os.path.join(_fixture_cache_root(sf_dir), "views", name)
+
+    def build(tmp: str) -> None:
+        view = _join_view(spark, tmp, how)
+        f1, f2, f3, f4 = fact.instants()
+        d1, d2, d3 = dim.instants()
+        # (fact end, dim end) per run; None = side quiescent. Windows
+        # and pinned snapshots come from the shared persisted fixture-
+        # frame cache — identical frames across the three replays.
+        schedule = [
+            (f1, d1), (f2, None), (None, d2), (f3, d3), (f4, None)
+        ]
+        f_prev = d_prev = None
+        for f_end, d_end in schedule:
+            f_cov = f_end or f_prev  # the pair the view lands on
+            d_cov = d_end or d_prev
+            view.apply(
+                _fixture_cdc(spark, sf_dir, fact, f_prev, f_end)
+                if f_end
+                else None,
+                {
+                    "dim": _fixture_cdc(spark, sf_dir, dim, d_prev, d_end)
+                    if d_end
+                    else None
+                },
+                dim_states={
+                    "dim": lambda t: _fixture_snap(spark, sf_dir, dim, t)
+                },
+                fact_base=(
+                    (
+                        lambda f=f_prev: _fixture_snap(
+                            spark, sf_dir, fact, f
+                        )
+                    )
+                    if f_prev is not None
+                    else None
+                ),
+                through={"fact": f_cov, "dim": d_cov},
+                base=lambda f=f_cov, d=d_cov: view.joined(
+                    _fixture_snap(spark, sf_dir, fact, f),
+                    {"dim": _fixture_snap(spark, sf_dir, dim, d)},
+                ),
+            )
+            f_prev, d_prev = f_cov, d_cov
+
+    view_path = _publish_dir(build, target)
+    built[sf_dir] = view_path
+    return _join_view(spark, view_path, how)
+
+
 @query("ivm_join_report", oracle=_JOIN_IVM_ORACLE)
 def ivm_join_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2e (delta-join IVM, operators/ivm.py MaintainedJoinAggregate —
@@ -878,83 +963,9 @@ def ivm_join_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribution terms, pair-token sequencing, dirty extremum healing
     — must compose to the exact SQL answer. Sums rounded to 2 decimals
     on both sides (the documented IVM float caveat)."""
-    from ..sinks.upsert import KeyedTable
-    from .ivm import MaintainedJoinAggregate
-
-    f_root, d_root, _ = _star_cdc_fixture(spark, sf_dir)
-    fact = KeyedTable.open(spark, f_root)
-    dim = KeyedTable.open(spark, d_root)
-
-    def _open(path: str) -> MaintainedJoinAggregate:
-        return MaintainedJoinAggregate(
-            spark, path, on=("ck", "ck"),
-            group_cols=["seg"], sum_cols=["price"],
-            minmax_cols=["price"], distinct_cols=["ck"],
-        )
-
-    # the maintained view is BUILT once and read on every later call —
-    # the production shape (maintain per window, read many times) and
-    # the honest steady state: re-running the full 5-window replay per
-    # invocation would benchmark view CONSTRUCTION forever, never the
-    # maintained read it exists to make cheap. Since r10 the built view
-    # persists in the cross-process fixture cache (VERDICT r9 #4), so a
-    # fresh session re-opens it; the replay cost is paid once per
-    # testdata content version.
-    cached = _JOIN_IVM_VIEWS.get(sf_dir)
-    if cached is not None and os.path.isdir(cached):
-        return _ivm_join_select(_open(cached))
-    target = os.path.join(_fixture_cache_root(sf_dir), "views", "jivm")
-
-    def build(tmp: str) -> None:
-        view = _open(tmp)
-        f1, f2, f3, f4 = fact.instants()
-        d1, d2, d3 = dim.instants()
-        # (fact end, dim end) per run; None = side quiescent. Windows
-        # and pinned snapshots come from the shared persisted fixture-
-        # frame cache — identical frames across the three replays.
-        schedule = [
-            (f1, d1), (f2, None), (None, d2), (f3, d3), (f4, None)
-        ]
-        f_prev = d_prev = None
-        for f_end, d_end in schedule:
-            f_cov = f_end or f_prev  # the pair the view lands on
-            d_cov = d_end or d_prev
-            f_win = (
-                _fixture_cdc(spark, sf_dir, fact, f_prev, f_end)
-                if f_end
-                else None
-            )
-            d_win = (
-                _fixture_cdc(spark, sf_dir, dim, d_prev, d_end)
-                if d_end
-                else None
-            )
-            view.apply(
-                f_win,
-                d_win,
-                dim_state=lambda d=d_cov: _fixture_snap(
-                    spark, sf_dir, dim, d
-                ),
-                fact_base=(
-                    (
-                        lambda f=f_prev: _fixture_snap(
-                            spark, sf_dir, fact, f
-                        )
-                    )
-                    if f_prev is not None
-                    else None
-                ),
-                through={"fact": f_cov, "dim": d_cov},
-                base=lambda f=f_cov, d=d_cov: view.joined(
-                    _fixture_snap(spark, sf_dir, fact, f),
-                    _fixture_snap(spark, sf_dir, dim, d),
-                ),
-            )
-            f_prev, d_prev = f_cov, d_cov
-
-    view_path = _publish_dir(build, target)
-    _JOIN_IVM_VIEWS[sf_dir] = view_path
-    return _ivm_join_select(_open(view_path))
+    return _ivm_join_select(
+        _replayed_join_view(spark, sf_dir, "inner", _JOIN_IVM_VIEWS, "jivm")
+    )
 
 
 def _ivm_join_select(view) -> DataFrame:
@@ -1030,73 +1041,9 @@ def ivm_outer_join_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute). The DuckDB oracle is the direct LEFT JOIN aggregate
     over the final state, NULL group included, plus avg and
     COUNT(DISTINCT jk) from the auxiliary distinct state."""
-    from ..sinks.upsert import KeyedTable
-    from .ivm import MaintainedJoinAggregate
-
-    f_root, d_root, _ = _star_cdc_fixture(spark, sf_dir)
-    fact = KeyedTable.open(spark, f_root)
-    dim = KeyedTable.open(spark, d_root)
-
-    def _open(path: str) -> MaintainedJoinAggregate:
-        return MaintainedJoinAggregate(
-            spark, path, on=("ck", "ck"),
-            group_cols=["seg"], sum_cols=["price"],
-            minmax_cols=["price"], distinct_cols=["ck"],
-            how="left",
-        )
-
-    cached = _OUTER_IVM_VIEWS.get(sf_dir)
-    if cached is not None and os.path.isdir(cached):
-        return _ivm_join_select(_open(cached))
-    target = os.path.join(_fixture_cache_root(sf_dir), "views", "oivm")
-
-    def build(tmp: str) -> None:
-        view = _open(tmp)
-        f1, f2, f3, f4 = fact.instants()
-        d1, d2, d3 = dim.instants()
-        schedule = [
-            (f1, d1), (f2, None), (None, d2), (f3, d3), (f4, None)
-        ]
-        f_prev = d_prev = None
-        for f_end, d_end in schedule:
-            f_cov = f_end or f_prev
-            d_cov = d_end or d_prev
-            f_win = (
-                _fixture_cdc(spark, sf_dir, fact, f_prev, f_end)
-                if f_end
-                else None
-            )
-            d_win = (
-                _fixture_cdc(spark, sf_dir, dim, d_prev, d_end)
-                if d_end
-                else None
-            )
-            view.apply(
-                f_win,
-                d_win,
-                dim_state=lambda d=d_cov: _fixture_snap(
-                    spark, sf_dir, dim, d
-                ),
-                fact_base=(
-                    (
-                        lambda f=f_prev: _fixture_snap(
-                            spark, sf_dir, fact, f
-                        )
-                    )
-                    if f_prev is not None
-                    else None
-                ),
-                through={"fact": f_cov, "dim": d_cov},
-                base=lambda f=f_cov, d=d_cov: view.joined(
-                    _fixture_snap(spark, sf_dir, fact, f),
-                    _fixture_snap(spark, sf_dir, dim, d),
-                ),
-            )
-            f_prev, d_prev = f_cov, d_cov
-
-    view_path = _publish_dir(build, target)
-    _OUTER_IVM_VIEWS[sf_dir] = view_path
-    return _ivm_join_select(_open(view_path))
+    return _ivm_join_select(
+        _replayed_join_view(spark, sf_dir, "left", _OUTER_IVM_VIEWS, "oivm")
+    )
 
 
 #: built star-CDC fixture roots: sf_dir → (fact, cust, part) roots
@@ -1405,30 +1352,22 @@ def stream_ivm_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream and batch replay must produce the identical SQL answer."""
     from ..sinks.upsert import KeyedTable
     from ..streaming.maintained import stream_maintained_join_view
-    from .ivm import MaintainedJoinAggregate
 
     f_root, d_root, _ = _star_cdc_fixture(spark, sf_dir)
     fact = KeyedTable.open(spark, f_root)
     dim = KeyedTable.open(spark, d_root)
 
-    def _open(path: str) -> MaintainedJoinAggregate:
-        return MaintainedJoinAggregate(
-            spark, path, on=("ck", "ck"),
-            group_cols=["seg"], sum_cols=["price"],
-            minmax_cols=["price"], distinct_cols=["ck"],
-        )
-
     cached = _STREAM_IVM_VIEWS.get(sf_dir)
     if cached is not None and os.path.isdir(cached):
-        return _ivm_join_select(_open(cached))
+        return _ivm_join_select(_join_view(spark, cached))
     f1 = fact.instants()[0]
     d1 = dim.instants()[0]
     view_path = tempfile.mkdtemp(prefix="stivm_view_")
-    view = _open(view_path)
+    view = _join_view(spark, view_path)
     view.rebuild(
         view.joined(
             _fixture_snap(spark, sf_dir, fact, f1),
-            _fixture_snap(spark, sf_dir, dim, d1),
+            {"dim": _fixture_snap(spark, sf_dir, dim, d1)},
         ),
         through={"fact": f1, "dim": d1},
     )

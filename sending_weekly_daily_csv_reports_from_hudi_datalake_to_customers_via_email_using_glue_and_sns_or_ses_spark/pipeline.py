@@ -457,31 +457,21 @@ def run_maintained_join_report(
     presigner: Presigner | None = None,
     sender: EmailSender | None = None,
 ) -> PipelineResult | None:
-    """One scheduled run of the maintained JOIN report: read both CDC
-    windows (each starting at max(checkpoint, view-through) — the
-    crash-extended-window guard), fold the delta-join terms, write the
-    CSV, deliver, then checkpoint both readers. Returns None when
-    neither source has new commits.
+    """One scheduled run of the maintained JOIN report: the star loop
+    (:func:`_run_maintained_star`) over the 2-table view — the star
+    with one dimension named ``"dim"`` — and its two readers, named
+    ``fact_name`` and ``dim_name``. Returns None when neither source
+    has new commits.
 
-    Exactly-once effect: the fold is guarded by the instant PAIR token,
-    the CSV key embeds both instants (redelivered runs rewrite the same
-    key), and only the email is at-least-once — the single-table loop's
-    contract extended to two sources. A replace commit
-    (insert_overwrite_table) on EITHER side re-seeds the view from the
-    post-replace joined snapshot (rebuild is idempotent) and resumes
-    incremental maintenance from the pair."""
-    from .operators.ivm import MaintainedJoinAggregate, routed_fact_base
-    from .sinks.upsert import ReplaceCommitError
+    Exactly-once effect: the fold is guarded by the instant PAIR token
+    ``{"fact", "dim"}``, the CSV key ``cdc_<fact>_<dim>`` embeds both
+    instants (redelivered runs rewrite the same key), and only the
+    email is at-least-once. A replace commit (insert_overwrite_table)
+    on EITHER side re-seeds the view from the post-replace joined
+    snapshot and resumes incremental maintenance from the pair."""
+    from .operators.ivm import MaintainedJoinAggregate
     from .sources.incremental import CDCReader
 
-    f_reader = CDCReader(
-        spark, config.fact_name, config.fact_path,
-        checkpoint_root=config.checkpoint_root,
-    )
-    d_reader = CDCReader(
-        spark, config.dim_name, config.dim_path,
-        checkpoint_root=config.checkpoint_root,
-    )
     view = MaintainedJoinAggregate(
         spark,
         config.view_path,
@@ -492,134 +482,18 @@ def run_maintained_join_report(
         distinct_cols=config.distinct_cols,
         how=config.how,
     )
-    if d_reader.table.record_key != view.dim_on:
-        # the delta math requires N:1 — at most one dim row per join
-        # key, which the KeyedTable guarantees only for its record key;
-        # a non-key join column would silently multiply fact rows
-        raise ValueError(
-            f"run_maintained_join_report: dim join column "
-            f"{view.dim_on!r} must be the dimension table's record key "
-            f"({d_reader.table.record_key!r}) — the maintained join is "
-            "N:1 by contract"
+    readers = {
+        side: CDCReader(
+            spark, name, path, checkpoint_root=config.checkpoint_root
         )
-    seen = view.through() or {}
-    rebuild = False
-    try:
-        f_win = f_reader.read(after=seen.get("fact"))
-    except ReplaceCommitError:
-        f_win, rebuild = None, True
-    try:
-        d_win = d_reader.read(after=seen.get("dim"))
-    except ReplaceCommitError:
-        d_win, rebuild = None, True
-
-    # each side's covered instant: staged window end, else the view's
-    # token, else the reader checkpoint (a window consumed by a run
-    # that folded nothing — the dim-first seed — leaves only the
-    # checkpoint). EVERY snapshot below pins to these instants: 'read
-    # current state' would race a commit landing mid-run, making the
-    # fact term see dim changes the next dim window then re-applies.
-    f_end = f_reader.staged_end() or seen.get("fact") or f_reader.checkpoint()
-    d_end = d_reader.staged_end() or seen.get("dim") or d_reader.checkpoint()
-    pair = {"fact": f_end, "dim": d_end}
-    if f_win is not None and d_end is None and not rebuild:
-        # fact rows exist but the dim side has never been consumed (and
-        # staged nothing — a commit racing in after the read doesn't
-        # count): the inner join is empty, so there is nothing to
-        # report; leave BOTH windows unconsumed and fold the pair once
-        # the dim side is readable
-        return None
-    _enrich = _avg_enricher(config.sum_cols, config.avg_cols)
-    gate = _quality_gate(
-        spark,
-        config.quality_rules,
-        _enrich,
-        run_key=lambda: f"cdc_{f_end}_{d_end}",
-        metric_history_path=config.metric_history_path,
-        max_rel_change=config.max_rel_change,
-    )
-    if rebuild:
-        # CDC across a replace is underivable by contract: re-seed from
-        # the joined snapshot AS OF the staged pair — O(join of the two
-        # snapshots), but only on replace commits
-        fs = f_reader.table.snapshot(as_of=f_end)
-        ds = d_reader.table.snapshot(as_of=d_end)
-        if fs is None or ds is None:
-            # one side has no state at the pair (e.g. a replace landed
-            # before the other table's first commit): the join is
-            # empty and there is nothing to report yet; the readers
-            # stay unconsumed so the pair retries once both sides exist
-            return None
-        view.rebuild(view.joined(fs, ds), through=pair, validate=gate)
-    elif f_win is None and d_win is None:
-        if f_reader.staged_end() is not None or (
-            d_reader.staged_end() is not None
-        ):
-            f_reader.commit()
-            d_reader.commit()  # view already covers it: catch-up
-        return None  # quiescent sources: no new report this run
-    else:
-        f_prev = seen.get("fact")
-        view.apply(
-            f_win,
-            d_win,
-            # all three snapshots are LAZY and time-travel-pinned to
-            # the pair: a fact-only run never reads the fact snapshot,
-            # a dim-only run never reads the dim snapshot, and clean
-            # MIN/MAX windows never build the joined base
-            dim_state=lambda: d_reader.table.snapshot(as_of=d_end),
-            # F₀ routed through the fact's bucket index when the
-            # layout is keyed on the join column (r11) — else the
-            # plain time-travel snapshot
-            fact_base=(
-                (
-                    lambda: routed_fact_base(
-                        f_reader.table,
-                        [(view.fact_on, view.dim_on, d_win)],
-                        as_of=f_prev,
-                    )
-                )
-                if f_prev is not None
-                else None
-            ),
-            through=pair,
-            base=(
-                lambda: view.joined(
-                    f_reader.table.snapshot(as_of=f_end),
-                    d_reader.table.snapshot(as_of=d_end),
-                )
-            )
-            if config.minmax_cols
-            else None,
-            validate=gate,
+        for side, name, path in (
+            ("fact", config.fact_name, config.fact_path),
+            ("dim", config.dim_name, config.dim_path),
         )
-    df = view.read(
-        avg=config.avg_cols, distinct=bool(config.distinct_cols)
+    }
+    return _run_maintained_star(
+        spark, config, view, readers, presigner, sender
     )
-    if df is None:
-        # dim-only windows at fact genesis fold to nothing (F₀ empty):
-        # consume them — their effect enters later fact terms through
-        # the dim snapshot — and report once fact rows exist
-        f_reader.commit()
-        d_reader.commit()
-        return None
-    report_path = write_csv_report(
-        df,
-        config.report_base,
-        report_id=f"cdc_{f_end}_{d_end}",
-        single_file=True,
-    )
-    email = deliver_report(
-        report_path,
-        config.recipients,
-        presigner=presigner,
-        sender=sender,
-        expires_in=config.file_expires_in,
-        subject=config.subject,
-    )
-    f_reader.commit()
-    d_reader.commit()
-    return PipelineResult(df=df, report_path=report_path, email=email)
 
 
 @dataclass
@@ -667,31 +541,13 @@ def run_maintained_star_report(
     presigner: Presigner | None = None,
     sender: EmailSender | None = None,
 ) -> PipelineResult | None:
-    """One scheduled run of the maintained STAR report: read all k+1
-    CDC windows (each starting at max(checkpoint, view-through)), fold
-    the telescoped delta terms, write the CSV, deliver, then checkpoint
-    every reader. Returns None when no source has new commits.
-
-    The join loop's contract generalized: exactly-once via the full
-    {side: instant} token; the CSV key embeds every instant; a replace
-    commit on ANY side re-seeds the view from the post-replace star
-    snapshot and resumes from the token; the quality gate runs
-    pre-pointer-flip so red windows genuinely retry."""
-    from .operators.ivm import MaintainedStarAggregate, routed_fact_base
-    from .sinks.upsert import ReplaceCommitError
+    """One scheduled run of the maintained STAR report: the star loop
+    (:func:`_run_maintained_star`) over the k-dim view, with the fact
+    reader named ``fact_name`` and each dim's ``<fact_name>__<dim>``.
+    Returns None when no source has new commits."""
+    from .operators.ivm import MaintainedStarAggregate
     from .sources.incremental import CDCReader
 
-    f_reader = CDCReader(
-        spark, config.fact_name, config.fact_path,
-        checkpoint_root=config.checkpoint_root,
-    )
-    d_readers = {
-        name: CDCReader(
-            spark, f"{config.fact_name}__{name}", path,
-            checkpoint_root=config.checkpoint_root,
-        )
-        for name, path, _, _ in config.dims
-    }
     view = MaintainedStarAggregate(
         spark,
         config.view_path,
@@ -702,14 +558,58 @@ def run_maintained_star_report(
         distinct_cols=config.distinct_cols,
         how=config.how,
     )
-    for (name, _, _, dim_on) in config.dims:
-        rk = d_readers[name].table.record_key
-        if rk != dim_on:
-            raise ValueError(
-                f"run_maintained_star_report: dim {name!r} join column "
-                f"{dim_on!r} must be its table's record key ({rk!r}) — "
-                "each star dimension is N:1 by contract"
+    readers = {
+        "fact": CDCReader(
+            spark, config.fact_name, config.fact_path,
+            checkpoint_root=config.checkpoint_root,
+        ),
+        **{
+            name: CDCReader(
+                spark, f"{config.fact_name}__{name}", path,
+                checkpoint_root=config.checkpoint_root,
             )
+            for name, path, _, _ in config.dims
+        },
+    }
+    return _run_maintained_star(
+        spark, config, view, readers, presigner, sender
+    )
+
+
+def _run_maintained_star(
+    spark: SparkSession,
+    config,  # MaintainedJoinReportConfig | MaintainedStarReportConfig
+    view,  # MaintainedStarAggregate (MaintainedJoinAggregate: one dim)
+    readers: dict,  # side ("fact" or a dim name) -> CDCReader
+    presigner: Presigner | None,
+    sender: EmailSender | None,
+) -> PipelineResult | None:
+    """The one report loop of the maintained joins: read all k+1 CDC
+    windows (each starting at max(checkpoint, view-through) — the
+    crash-extended-window guard), fold the telescoped delta-join terms,
+    write the CSV, deliver, then checkpoint every reader.
+
+    Exactly-once via the full {side: instant} token; the CSV key
+    embeds every instant; a replace commit on ANY side re-seeds the
+    view from the post-replace star snapshot and resumes from the
+    token; the quality gate runs pre-pointer-flip so red windows
+    genuinely retry."""
+    from .operators.ivm import routed_fact_base
+    from .sinks.upsert import ReplaceCommitError
+
+    for name, _, dim_on in view.dims:
+        rk = readers[name].table.record_key
+        if rk != dim_on:
+            # the delta math requires N:1 — at most one dim row per
+            # join key, which the table guarantees only for its record
+            # key; a non-key join column would silently multiply rows
+            raise ValueError(
+                f"{type(view).__name__}: dim {name!r} join column "
+                f"{dim_on!r} must be its table's record key ({rk!r}) — "
+                "each dimension of the maintained join is N:1 by contract"
+            )
+    dim_names = [n for n, _, _ in view.dims]
+    f_table = readers["fact"].table
 
     _enrich = _avg_enricher(config.sum_cols, config.avg_cols)
     gate = _quality_gate(
@@ -718,17 +618,13 @@ def run_maintained_star_report(
         _enrich,
         # `ends` is assigned after the readers stage their windows —
         # the gate only runs inside apply/rebuild, past that point
-        run_key=lambda: "cdc_" + "_".join(
-            str(ends[s])
-            for s in ["fact"] + [n for n, _, _, _ in config.dims]
-        ),
+        run_key=lambda: "cdc_" + "_".join(str(ends[s]) for s in readers),
         metric_history_path=config.metric_history_path,
         max_rel_change=config.max_rel_change,
     )
     seen = view.through() or {}
     rebuild = False
     wins: dict = {}
-    readers = {"fact": f_reader, **d_readers}
     for side, reader in readers.items():
         try:
             wins[side] = reader.read(after=seen.get(side))
@@ -736,67 +632,76 @@ def run_maintained_star_report(
             wins[side], rebuild = None, True
 
     # each side's covered instant: staged window end, else the view's
-    # token, else the reader checkpoint — every snapshot below pins to
-    # these (never 'current': a commit racing in mid-run would leak)
+    # token, else the reader checkpoint (a window consumed by a run
+    # that folded nothing — the dim-first seed — leaves only the
+    # checkpoint). EVERY snapshot below pins to these instants: 'read
+    # current state' would race a commit landing mid-run, making the
+    # fact term see dim changes the next dim window then re-applies.
     ends = {
         side: reader.staged_end() or seen.get(side) or reader.checkpoint()
         for side, reader in readers.items()
     }
-    token = dict(ends)
     if wins["fact"] is not None and not rebuild and any(
-        ends[n] is None for n, _, _, _ in config.dims
+        ends[n] is None for n in dim_names
     ):
-        # fact rows exist but some dimension has never been consumed:
-        # the inner join is empty — leave every window unconsumed and
-        # fold once all sides are readable
+        # fact rows exist but some dimension has never been consumed
+        # (and staged nothing — a commit racing in after the read
+        # doesn't count): the inner join is empty — leave every window
+        # unconsumed and fold once all sides are readable
         return None
 
-    def _snaps(instants):
-        fs = f_reader.table.snapshot(as_of=instants["fact"])
-        ds = {
-            n: d_readers[n].table.snapshot(as_of=instants[n])
-            for n, _, _, _ in config.dims
-        }
+    def _snaps():
+        fs = f_table.snapshot(as_of=ends["fact"])
+        ds = {n: readers[n].table.snapshot(as_of=ends[n]) for n in dim_names}
         return fs, ds
 
     if rebuild:
-        fs, ds = _snaps(ends)
+        # CDC across a replace is underivable by contract: re-seed from
+        # the joined snapshot AS OF the staged token — O(join of the
+        # snapshots), but only on replace commits
+        fs, ds = _snaps()
         if fs is None or any(v is None for v in ds.values()):
-            return None  # some side has no state yet: nothing to report
-        view.rebuild(view.joined(fs, ds), through=token, validate=gate)
+            # some side has no state at the token (e.g. a replace
+            # landed before another table's first commit): the join is
+            # empty and there is nothing to report yet; the readers
+            # stay unconsumed so the set retries once every side exists
+            return None
+        view.rebuild(view.joined(fs, ds), through=dict(ends), validate=gate)
     elif all(w is None for w in wins.values()):
         if any(r.staged_end() is not None for r in readers.values()):
             for r in readers.values():
                 r.commit()  # view already covers it: catch-up
-        return None
+        return None  # quiescent sources: no new report this run
     else:
         f_prev = seen.get("fact")
         view.apply(
             wins["fact"],
-            {n: wins[n] for n, _, _, _ in config.dims},
+            {n: wins[n] for n in dim_names},
+            # every snapshot is LAZY and time-travel-pinned to the
+            # token: the view requests only the instants its live terms
+            # need, a fact-only run never reads the fact snapshot, and
+            # clean MIN/MAX windows never build the joined base
             dim_states={
-                n: (
-                    lambda t, tab=d_readers[n].table: tab.snapshot(as_of=t)
-                )
-                for n, _, _, _ in config.dims
+                n: (lambda t, tab=readers[n].table: tab.snapshot(as_of=t))
+                for n in dim_names
             },
+            # F₀ routed through the fact's bucket index when the layout
+            # is keyed on the join column (r11) — else the plain
+            # time-travel snapshot
             fact_base=(
                 (
                     lambda: routed_fact_base(
-                        f_reader.table,
-                        [
-                            (fo, do, wins[n])
-                            for n, _, fo, do in config.dims
-                        ],
+                        f_table,
+                        [(fo, do, wins[n]) for n, fo, do in view.dims],
                         as_of=f_prev,
                     )
                 )
                 if f_prev is not None
                 else None
             ),
-            through=token,
+            through=dict(ends),
             base=(
-                (lambda: view.joined(*_snaps(ends)))
+                (lambda: view.joined(*_snaps()))
                 if config.minmax_cols
                 else None
             ),
@@ -806,18 +711,16 @@ def run_maintained_star_report(
         avg=config.avg_cols, distinct=bool(config.distinct_cols)
     )
     if df is None:
-        # dim windows at fact genesis fold to nothing: consume them —
-        # their effect enters later fact terms through the dim
-        # snapshots — and report once fact rows exist
+        # dim windows at fact genesis fold to nothing (F₀ empty):
+        # consume them — their effect enters later fact terms through
+        # the dim snapshots — and report once fact rows exist
         for r in readers.values():
             r.commit()
         return None
     report_path = write_csv_report(
         df,
         config.report_base,
-        report_id="cdc_" + "_".join(
-            str(ends[s]) for s in ["fact"] + [n for n, _, _, _ in config.dims]
-        ),
+        report_id="cdc_" + "_".join(str(ends[s]) for s in readers),
         single_file=True,
     )
     email = deliver_report(

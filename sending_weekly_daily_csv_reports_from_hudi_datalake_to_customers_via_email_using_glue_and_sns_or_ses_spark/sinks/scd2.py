@@ -14,12 +14,10 @@ so current-row queries prune to recent partitions.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..operators.ivm import VersionedView
 
 
 def scd2_apply(
@@ -91,14 +89,15 @@ def scd2_as_of(history: DataFrame, ts) -> DataFrame:
     )
 
 
-class MaintainedSCD2:
+class MaintainedSCD2(VersionedView):
     """CDC-driven SCD2 dimension history (r10, VERDICT r9 #8):
     :func:`scd2_apply` is batch-only — this class drives the same
     type-2 semantics from ``KeyedTable.cdc`` / ``CDCReader`` windows
     under the SAME versioned-dir + pointer + ``through``-token
-    durability/exactly-once contract as the maintained aggregates
-    (operators/ivm.py), so a dimension's full version history stays
-    continuously current and point-in-time joins read one filter.
+    durability/exactly-once contract as the maintained aggregates (it
+    IS a :class:`..operators.ivm.VersionedView`), so a dimension's
+    full version history stays continuously current and point-in-time
+    joins read one filter.
 
     Validity is in COMMIT-ID space (``valid_from``/``valid_to`` are the
     table's commit instants, strings with total order): ``as_of(c)``
@@ -128,39 +127,13 @@ class MaintainedSCD2:
     TOMBSTONE_COL = "__tombstone"
 
     def __init__(self, spark, path: str, key: str):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.key = key
-        os.makedirs(path, exist_ok=True)
-
-    # -- pointer / versions (the MaintainedAggregate discipline) --------
-    def _pointer(self) -> str:
-        return os.path.join(self.path, "_latest")
-
-    def _meta(self) -> dict | None:
-        try:
-            with open(self._pointer()) as f:
-                return json.loads(f.read())
-        except FileNotFoundError:
-            return None
-
-    def through(self) -> str | None:
-        meta = self._meta()
-        return meta.get("through") if meta else None
-
-    def _raw(self) -> DataFrame | None:
-        """Stored rows INCLUDING tombstone markers (fold input)."""
-        meta = self._meta()
-        if meta is None:
-            return None
-        return self.spark.read.parquet(
-            os.path.join(self.path, f"v={meta['version']}")
-        )
 
     def history(self) -> DataFrame | None:
         """The SCD2 history: business columns + valid_from/valid_to
         (commit ids; valid_to NULL = current). Markers filtered."""
-        raw = self._raw()
+        raw = self._published()
         if raw is None:
             return None
         return raw.filter(~F.col(self.TOMBSTONE_COL)).drop(
@@ -183,34 +156,6 @@ class MaintainedSCD2:
             (F.col("valid_from") <= c)
             & (F.col("valid_to").isNull() | (F.col("valid_to") > c))
         )
-
-    def _publish(self, df: DataFrame, through: str | None) -> None:
-        meta = self._meta()
-        v = (meta["version"] if meta else 0) + 1
-        out = os.path.join(self.path, f"v={v}")
-        df.write.mode("overwrite").parquet(out)
-        tmp = self._pointer() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"version": v, "through": through}, f)
-        os.replace(tmp, self._pointer())
-        for name in os.listdir(self.path):
-            if name.startswith("v=") and name[2:].isdigit():
-                if int(name[2:]) < v - 1:
-                    shutil.rmtree(
-                        os.path.join(self.path, name), ignore_errors=True
-                    )
-
-    def _fresh(self, through: str | None) -> bool:
-        seen = self.through()
-        if through is None:
-            if seen is not None:
-                raise ValueError(
-                    "MaintainedSCD2.apply without a through token on a "
-                    f"history maintained through {seen!r} — publishing "
-                    "would erase the token and unguard redelivery"
-                )
-            return True
-        return seen is None or through > seen
 
     # -- folds -----------------------------------------------------------
     def rebuild(self, snapshot: DataFrame, through: str) -> None:
@@ -244,7 +189,8 @@ class MaintainedSCD2:
             F.lit(None).cast("string").alias("valid_to"),
             is_del.alias(self.TOMBSTONE_COL),
         )
-        raw = self._raw()
+        # stored rows INCLUDING tombstone markers (the fold input)
+        raw = self._published()
         untouched = None
         if raw is None:
             versions = events  # genesis fold: no stored chains yet

@@ -64,7 +64,7 @@ from pyspark.sql import functions as F
 
 from ..operators.ivm import (
     MaintainedAggregate,
-    MaintainedJoinAggregate,
+    MaintainedStarAggregate,
     routed_fact_base,
 )
 from ..sinks.filegroups import open_any_table
@@ -320,160 +320,37 @@ def stream_maintained_join_view(
     max_rel_change: float = 0.1,
     avg_cols: bool = True,
 ):
-    """Continuously maintain the 2-table JOIN aggregate
-    (:class:`~..operators.ivm.MaintainedJoinAggregate`) — the
+    """Continuously maintain the 2-table JOIN aggregate — the
     reference's actual report query (template.py:485-490) — from BOTH
-    tables' CDC streams, unioned into one wake-up stream so a single
-    foreachBatch driver folds coordinated window PAIRS under the
-    {fact, dim} token (the same exactly-once pair contract as the
-    batch loop ``pipeline.run_maintained_join_report``).
-
-    Pair coordination: every trigger folds everything PUBLISHED on
-    both sides up to their current pointers, regardless of which
-    side's files woke the driver — so a dim commit arriving after a
-    backlog of fact commits folds the whole coordinated pair at once,
-    and a fact-only wake with a quiescent dim folds a fact-only window
-    (the dim term skipped, the quiescent instant carried forward). A
-    replace on EITHER side re-seeds from the joined post-replace
-    snapshots. A fact-ahead-of-dim genesis (fact rows exist, dim never
-    readable) defers — the inner join is empty — until the dim's first
-    commit wakes the driver. Both tables must have published at least
-    one commit before the stream opens (the ``stream_cdc`` contract:
-    a streaming plan cannot add sources later)."""
-    table_f = open_any_table(spark, fact_root)
-    table_d = open_any_table(spark, dim_root)
-    view = MaintainedJoinAggregate(
+    tables' CDC streams: :func:`stream_maintained_star_view` with ONE
+    dimension named ``"dim"``, so the view on disk, its ``{"fact",
+    "dim"}`` token and the stream's side labels are those of
+    :class:`~..operators.ivm.MaintainedJoinAggregate` and of the batch
+    loop ``pipeline.run_maintained_join_report``. ``on`` is the
+    equi-join column (one name, or ``(fact_col, dim_col)``); the dim's
+    record key must be its join column."""
+    fact_on, dim_on = (on, on) if isinstance(on, str) else on
+    return stream_maintained_star_view(
         spark,
+        fact_root,
+        [("dim", dim_root, fact_on, dim_on)],
         view_path,
-        on=on,
-        group_cols=group_cols,
-        sum_cols=sum_cols,
+        group_cols,
+        sum_cols,
+        checkpoint_location,
         minmax_cols=minmax_cols,
         distinct_cols=distinct_cols,
         how=how,
-    )
-    if table_d.record_key != view.dim_on:
-        raise ValueError(
-            f"stream_maintained_join_view: dim join column "
-            f"{view.dim_on!r} must be the dimension table's record key "
-            f"({table_d.record_key!r}) — the maintained join is N:1 by "
-            "contract"
-        )
-    run_key_cell: dict = {}
-    gate = _stream_gate(
-        spark, quality_rules, sum_cols, avg_cols,
-        metric_history_path, max_rel_change, run_key_cell,
-    )
-
-    def fold(batch_df, _batch_id):
-        maxes = _batch_max_by_side(batch_df)
-        seen = view.through() or {}
-        f_end = _published_end(
-            table_f, maxes.get("fact"), publish_wait_s,
-            strict_publish_wait,
-        )
-        d_end = _published_end(
-            table_d, maxes.get("dim"), publish_wait_s,
-            strict_publish_wait,
-        )
-        f_seen, d_seen = seen.get("fact"), seen.get("dim")
-        f_adv = f_end is not None and (f_seen is None or f_end > f_seen)
-        d_adv = d_end is not None and (d_seen is None or d_end > d_seen)
-        if not f_adv and not d_adv:
-            return  # covered (restart redelivery) or nothing published
-        if f_end is not None and d_end is None:
-            # fact rows exist but the dim side has never published:
-            # the inner join is empty — defer the WHOLE pair (the batch
-            # loop's rule); the dim's first commit wakes the driver and
-            # folds everything
-            return
-        pair = {
-            "fact": f_end if f_adv else f_seen,
-            "dim": d_end if d_adv else d_seen,
-        }
-        run_key_cell["key"] = f"cdc_{pair['fact']}_{pair['dim']}"
-
-        # fold-local snapshot memo: dim_state, fact_base, and the
-        # minmax base pin the SAME (table, instant) snapshots — build
-        # each time-travel plan once per fold (r9 review)
-        snaps: dict = {}
-
-        def _snap(table, inst):
-            key = (table.root, inst)
-            if key not in snaps:
-                snaps[key] = table.snapshot(as_of=inst)
-            return snaps[key]
-
-        def reseed():
-            fs = _snap(table_f, pair["fact"])
-            ds = _snap(table_d, pair["dim"])
-            if fs is None or ds is None:
-                return False  # one side has no state yet: nothing to do
-            view.rebuild(view.joined(fs, ds), through=pair, validate=gate)
-            return True
-
-        # genesis = the TOKEN is absent — also heals a view seeded
-        # without a through token (r9 review: the old current()-is-None
-        # clause crash-looped that state with a misleading fact_base
-        # error; rebuild is idempotent, so re-seeding is always safe)
-        if f_seen is None:
-            # seed from the joined snapshots (cheaper and replace-proof
-            # versus replaying both histories as CDC)
-            if not reseed():
-                return
-        else:
-            try:
-                f_win = (
-                    table_f.cdc(begin=f_seen, end=pair["fact"])
-                    if f_adv
-                    else None
-                )
-                d_win = (
-                    table_d.cdc(begin=d_seen, end=pair["dim"])
-                    if d_adv
-                    else None
-                )
-            except ReplaceCommitError:
-                if not reseed():
-                    return
-            else:
-                view.apply(
-                    f_win,
-                    d_win,
-                    dim_state=lambda: _snap(table_d, pair["dim"]),
-                    # NOT the _snap memo: the routed read is pruned to
-                    # the window's keys, narrower than the (table,
-                    # instant) snapshots the memo shares
-                    fact_base=(
-                        (
-                            lambda: routed_fact_base(
-                                table_f,
-                                [(view.fact_on, view.dim_on, d_win)],
-                                as_of=f_seen,
-                            )
-                        )
-                        if f_seen is not None
-                        else None
-                    ),
-                    through=pair,
-                    base=(
-                        lambda: view.joined(
-                            _snap(table_f, pair["fact"]),
-                            _snap(table_d, pair["dim"]),
-                        )
-                    )
-                    if minmax_cols
-                    else None,
-                    validate=gate,
-                )
-        if on_update is not None:
-            on_update(view, pair)
-
-    src = _signal(spark, fact_root, "fact", max_files_per_trigger).unionByName(
-        _signal(spark, dim_root, "dim", max_files_per_trigger)
-    )
-    return _start_writer(
-        src, fold, checkpoint_location, available_now, processing_time
+        max_files_per_trigger=max_files_per_trigger,
+        publish_wait_s=publish_wait_s,
+        strict_publish_wait=strict_publish_wait,
+        on_update=on_update,
+        available_now=available_now,
+        processing_time=processing_time,
+        quality_rules=quality_rules,
+        metric_history_path=metric_history_path,
+        max_rel_change=max_rel_change,
+        avg_cols=avg_cols,
     )
 
 
@@ -499,20 +376,28 @@ def stream_maintained_star_view(
     max_rel_change: float = 0.1,
     avg_cols: bool = True,
 ):
-    """The k-dimension generalization of
-    :func:`stream_maintained_join_view`: maintain a STAR aggregate
+    """Continuously maintain a STAR aggregate
     (:class:`~..operators.ivm.MaintainedStarAggregate`) from all k+1
-    CDC streams unioned into one wake-up stream. ``dims`` entries are
-    ``(name, table_root, fact_on, dim_on)`` — the
-    ``pipeline.MaintainedStarReportConfig`` shape. Same contract as
-    the join driver: every trigger folds everything PUBLISHED on every
-    side up to its pointer, token-guarded exactly-once across
-    restarts, replace on ANY side re-seeds from the star snapshots,
-    genesis defers until every dimension has published at least one
-    commit (the inner star join is empty before that), and every
-    table must have one commit before the stream opens."""
-    from ..operators.ivm import MaintainedStarAggregate
+    tables' CDC streams, unioned into one wake-up stream so a single
+    foreachBatch driver folds coordinated window SETS under the
+    ``{side: instant}`` token (the exactly-once contract of the batch
+    loop ``pipeline.run_maintained_star_report``). ``dims`` entries
+    are ``(name, table_root, fact_on, dim_on)`` — the
+    ``pipeline.MaintainedStarReportConfig`` shape; the 2-table join is
+    the one-dim case (:func:`stream_maintained_join_view`).
 
+    Set coordination: every trigger folds everything PUBLISHED on
+    every side up to its pointer, regardless of which side's files
+    woke the driver — a dim commit arriving after a backlog of fact
+    commits folds the whole set at once, and a fact-only wake with
+    quiescent dims folds a fact-only window (dim terms skipped, the
+    quiescent instants carried forward). Token-guarded exactly-once
+    across restarts; a replace on ANY side re-seeds from the star
+    snapshots; genesis defers until every dimension has published at
+    least one commit (the inner star join is empty before that); and
+    every table must have one commit before the stream opens (the
+    ``stream_cdc`` contract: a streaming plan cannot add sources
+    later)."""
     table_f = open_any_table(spark, fact_root)
     dim_tables = {
         name: open_any_table(spark, root) for name, root, _, _ in dims
@@ -571,6 +456,9 @@ def stream_maintained_star_view(
             str(token[s]) for s in ["fact"] + dim_names
         )
 
+        # fold-local snapshot memo: dim_states, and the minmax base pin
+        # the SAME (table, instant) snapshots — build each time-travel
+        # plan once per fold (r9 review)
         snaps: dict = {}
 
         def _snap(table, inst):
@@ -589,8 +477,10 @@ def stream_maintained_star_view(
             )
             return True
 
-        # token-absent = genesis (heals token-less seeded views too —
-        # see the join driver)
+        # genesis = the TOKEN is absent — also heals a view seeded
+        # without a through token (r9 review: the old current()-is-None
+        # clause crash-looped that state with a misleading fact_base
+        # error; rebuild is idempotent, so re-seeding is always safe)
         if seen.get("fact") is None:
             if not reseed():
                 return
@@ -615,6 +505,9 @@ def stream_maintained_star_view(
                         n: (lambda t, tab=dim_tables[n]: _snap(tab, t))
                         for n in dim_names
                     },
+                    # NOT the _snap memo: the routed read is pruned to
+                    # the windows' keys, narrower than the (table,
+                    # instant) snapshots the memo shares
                     fact_base=(
                         (
                             lambda: routed_fact_base(

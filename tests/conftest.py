@@ -42,11 +42,12 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    # local[10] (was local[4]): the suite's heavy tail is genuinely
-    # CPU-bound Spark work at sf0.1 — the worst test measured 95 s on
-    # 4 cores vs 73 s on 8 on an otherwise idle 32-core box; tiny-data
-    # tests are scheduling-bound and unaffected.
-    s = get_spark(app_name="tests", master="local[10]", shuffle_partitions=8)
+    # local[$SPARK_GRAFT_CPUS] (get_spark's default; the Tier-1 command
+    # sets it to the host's cores): the suite's heavy tail is CPU-bound
+    # Spark work at sf0.1, so it scales with the cores the host has —
+    # a fixed thread count oversubscribes a small host and idles a big
+    # one; tiny-data tests are scheduling-bound and unaffected.
+    s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s
     s.stop()
 

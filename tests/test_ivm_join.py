@@ -115,12 +115,15 @@ def _run_pair(view, fact_t, dim_t, f_reader, d_reader):
     """One coordinated maintenance run — the run_maintained_join_report
     protocol in miniature: windows start at max(checkpoint, view
     through), through is the instant PAIR, snapshots are time-travel
-    pinned to the pair (never 'latest')."""
+    pinned to the pair (never 'latest'). Each side's covered instant
+    is the staged window end, else the view token, else the reader
+    checkpoint (a window consumed by a run that folded nothing — the
+    dim seed at fact genesis — leaves only the checkpoint)."""
     seen = view.through() or {}
     f_win = f_reader.read(after=seen.get("fact"))
     d_win = d_reader.read(after=seen.get("dim"))
-    f_end = f_reader.staged_end() or seen.get("fact")
-    d_end = d_reader.staged_end() or seen.get("dim")
+    f_end = f_reader.staged_end() or seen.get("fact") or f_reader.checkpoint()
+    d_end = d_reader.staged_end() or seen.get("dim") or d_reader.checkpoint()
     if f_win is None and d_win is None:
         f_reader.commit()
         d_reader.commit()
@@ -128,8 +131,8 @@ def _run_pair(view, fact_t, dim_t, f_reader, d_reader):
     f_prev = seen.get("fact")
     view.apply(
         f_win,
-        d_win,
-        dim_state=lambda: dim_t.snapshot(as_of=d_end),
+        {"dim": d_win},
+        dim_states={"dim": lambda t: dim_t.snapshot(as_of=t)},
         fact_base=(
             (lambda: fact_t.snapshot(as_of=f_prev)) if f_prev else None
         ),
@@ -266,13 +269,16 @@ def test_join_ivm_exactly_once_pair_token(spark, tmp_path):
     f_win = f_reader.read()
     d_win = d_reader.read()
     pair = {"fact": f_reader.staged_end(), "dim": d_reader.staged_end()}
+    dim_states = {"dim": lambda t: dim_t.snapshot(as_of=t)}
     assert view.apply(
-        f_win, d_win, dim_state=dim_t.snapshot(), through=pair
+        f_win, {"dim": d_win}, dim_states=dim_states, through=pair
     )
     # crash before the readers commit: same pair redelivered → no-op
     f_win2, d_win2 = f_reader.read(), d_reader.read()
     assert (
-        view.apply(f_win2, d_win2, dim_state=dim_t.snapshot(), through=pair)
+        view.apply(
+            f_win2, {"dim": d_win2}, dim_states=dim_states, through=pair
+        )
         is False
     )
     f_reader.commit()
@@ -285,8 +291,8 @@ def test_join_ivm_exactly_once_pair_token(spark, tmp_path):
     with pytest.raises(ValueError, match="double-count"):
         view.apply(
             f_win2,  # a fact window whose instants the view already folded
-            d_win3,
-            dim_state=dim_t.snapshot(),
+            {"dim": d_win3},
+            dim_states=dim_states,
             fact_base=fact_t.snapshot(as_of=pair["fact"]),
             through=bad,
         )
@@ -310,8 +316,8 @@ def test_join_ivm_lazy_snapshots(spark, tmp_path):
     seen = view.through()
     view.apply(
         f_win,
-        None,
-        dim_state=lambda: dim_t.snapshot(as_of=seen["dim"]),
+        {"dim": None},
+        dim_states={"dim": lambda t: dim_t.snapshot(as_of=t)},
         fact_base=explode,
         through={"fact": f_reader.staged_end(), "dim": seen["dim"]},
     )
@@ -322,8 +328,8 @@ def test_join_ivm_lazy_snapshots(spark, tmp_path):
     seen = view.through()
     view.apply(
         None,
-        d_win,
-        dim_state=explode,
+        {"dim": d_win},
+        dim_states={"dim": lambda t: explode()},
         fact_base=lambda: fact_t.snapshot(as_of=seen["fact"]),
         through={"fact": seen["fact"], "dim": d_reader.staged_end()},
     )
@@ -335,9 +341,11 @@ def test_join_ivm_ambiguous_and_unknown_columns_raise(spark, tmp_path):
     """Side resolution fails loudly: a maintained column found on both
     sides, or on neither, raises at apply time."""
     fact_t, dim_t, f_reader, d_reader, _ = _make(spark, tmp_path, "a")
-    dim_t.upsert(_dim(spark, [(1, 0, "x")]))
+    d1 = dim_t.upsert(_dim(spark, [(1, 0, "x")]))
     fact_t.upsert(_fact(spark, [(10, 0, 1, 5)]))
     f_win = f_reader.read()
+    pair = {"fact": f_reader.staged_end(), "dim": d1}
+    dim_states = {"dim": lambda t: dim_t.snapshot(as_of=t)}
     bad = MaintainedJoinAggregate(
         spark,
         str(tmp_path / "viewbad"),
@@ -346,7 +354,7 @@ def test_join_ivm_ambiguous_and_unknown_columns_raise(spark, tmp_path):
         sum_cols=["famount"],
     )
     with pytest.raises(ValueError, match="NEITHER"):
-        bad.apply(f_win, None, dim_state=dim_t.snapshot())
+        bad.apply(f_win, {"dim": None}, dim_states=dim_states, through=pair)
     # 'jk' exists on both sides (fact data col AND dim record key) and
     # is NOT the equi-join pair here (fact joins on 'fk') — ambiguous
     ambiguous = MaintainedJoinAggregate(
@@ -357,7 +365,9 @@ def test_join_ivm_ambiguous_and_unknown_columns_raise(spark, tmp_path):
         sum_cols=["famount"],
     )
     with pytest.raises(ValueError, match="BOTH"):
-        ambiguous.apply(f_win, None, dim_state=dim_t.snapshot())
+        ambiguous.apply(
+            f_win, {"dim": None}, dim_states=dim_states, through=pair
+        )
     # but the SAME-NAMED equi-join key is legal (r9): the join equality
     # makes the two copies identical, the fact side serves it — e.g.
     # grouping or distinct-counting by the join key itself
@@ -368,7 +378,7 @@ def test_join_ivm_ambiguous_and_unknown_columns_raise(spark, tmp_path):
         group_cols=["jk"],
         sum_cols=["famount"],
     )
-    by_key.apply(f_win, None, dim_state=dim_t.snapshot())
+    by_key.apply(f_win, {"dim": None}, dim_states=dim_states, through=pair)
     assert sorted(
         (r["jk"], r["n_rows"], r["sum_famount"])
         for r in by_key.current().collect()
@@ -467,14 +477,15 @@ def test_outer_join_ivm_tracks_recompute_over_random_history(
         f_prev = seen.get("fact")
         view.apply(
             f_win,
-            d_win,
-            dim_state=lambda: dim_t.snapshot(as_of=d_end),
+            {"dim": d_win},
+            dim_states={"dim": lambda t: dim_t.snapshot(as_of=t)},
             fact_base=(
                 (lambda: fact_t.snapshot(as_of=f_prev)) if f_prev else None
             ),
             through={"fact": f_end, "dim": d_end},
             base=lambda: view.joined(
-                fact_t.snapshot(as_of=f_end), dim_t.snapshot(as_of=d_end)
+                fact_t.snapshot(as_of=f_end),
+                {"dim": dim_t.snapshot(as_of=d_end)},
             ),
         )
         f_reader.commit()
@@ -589,10 +600,11 @@ def test_outer_join_ivm_dim_key_as_maintained_column(spark, tmp_path):
         _fact(spark, [(10, 0, 1, 5), (11, 0, 2, 7)])
     )
     d1 = dim_t.latest_commit()
+    dim_states = {"dim": lambda t: dim_t.snapshot(as_of=t)}
     view.apply(
         fact_t.cdc(end=f1),
-        None,
-        dim_state=lambda: dim_t.snapshot(as_of=d1),
+        {"dim": None},
+        dim_states=dim_states,
         through={"fact": f1, "dim": d1},
     )
     got = sorted(
@@ -607,7 +619,8 @@ def test_outer_join_ivm_dim_key_as_maintained_column(spark, tmp_path):
     )
     view.apply(
         None,
-        dim_t.cdc(begin=d1, end=d2),
+        {"dim": dim_t.cdc(begin=d1, end=d2)},
+        dim_states=dim_states,
         fact_base=lambda: fact_t.snapshot(as_of=f1),
         through={"fact": f1, "dim": d2},
     )

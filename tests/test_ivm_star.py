@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sending_weekly_daily_csv_reports_from_hudi_datalake_to_customers_via_email_using_glue_and_sns_or_ses_spark.operators.ivm import (
+    MaintainedJoinAggregate,
     MaintainedStarAggregate,
 )
 from sending_weekly_daily_csv_reports_from_hudi_datalake_to_customers_via_email_using_glue_and_sns_or_ses_spark.sinks.upsert import (
@@ -232,15 +233,24 @@ def test_star_ivm_simultaneous_dim_changes(spark, tmp_path):
     )
 
 
-def test_star_ivm_requires_token(spark, tmp_path):
+@pytest.mark.parametrize("shape", ["star", "join"])
+def test_star_ivm_requires_token(spark, tmp_path, shape):
+    """Untokenized applies raise for the k-dim star and for the 2-table
+    join, which is the star with one dim named "dim"."""
     fact, cust, part, readers, view = _make(spark, tmp_path, "t")
-    cust.upsert(spark.createDataFrame([(1, 0, "x")], CUST_S))
-    with pytest.raises(ValueError, match="through token"):
-        view.apply(
-            None,
-            {"cust": readers["cust"].read(), "part": None},
-            dim_states={},
+    if shape == "join":
+        view = MaintainedJoinAggregate(
+            spark, str(tmp_path / "vjoin"), on="ck",
+            group_cols=["seg"], sum_cols=["amount"],
         )
+    cust.upsert(spark.createDataFrame([(1, 0, "x")], CUST_S))
+    dim_wins = (
+        {"cust": readers["cust"].read(), "part": None}
+        if shape == "star"
+        else {"dim": readers["cust"].read()}
+    )
+    with pytest.raises(ValueError, match="through token"):
+        view.apply(None, dim_wins, dim_states={})
 
 
 def test_star_ivm_dim_only_migration_with_other_dim_quiescent(

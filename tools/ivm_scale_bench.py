@@ -102,7 +102,7 @@ def _recompute(view, fact, dim, out_dir: str) -> float:
     """The reference's per-run shape: full join + aggregate, executed
     end-to-end into parquet."""
     t0 = time.time()
-    view.joined(fact.snapshot(), dim.snapshot()).groupBy("seg").agg(
+    view.joined(fact.snapshot(), {"dim": dim.snapshot()}).groupBy("seg").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("price").alias("sum_price"),
     ).write.mode("overwrite").parquet(out_dir)
@@ -118,7 +118,7 @@ def _assert_parity(view, fact, dim) -> None:
     )
     want = sorted(
         (r["seg"], r["n_rows"], str(r["sum_price"]))
-        for r in view.joined(fact.snapshot(), dim.snapshot())
+        for r in view.joined(fact.snapshot(), {"dim": dim.snapshot()})
         .groupBy("seg")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -163,7 +163,7 @@ def run_scale(spark: SparkSession, sf_dir: str, tag: str) -> dict:
     )
     t0 = time.time()
     view.rebuild(
-        view.joined(fact.snapshot(), dim.snapshot()),
+        view.joined(fact.snapshot(), {"dim": dim.snapshot()}),
         through={"fact": f1, "dim": d1},
     )
     out["seed_view_sec"] = round(time.time() - t0, 2)
@@ -185,10 +185,11 @@ def run_scale(spark: SparkSession, sf_dir: str, tag: str) -> dict:
     )
     f2 = fact.upsert(upd)
     t0 = time.time()
+    dim_states = {"dim": lambda t: dim.snapshot(as_of=t)}
     view.apply(
         fact.cdc(begin=f1, end=f2),
-        None,
-        dim_state=lambda: dim.snapshot(as_of=d1),
+        {"dim": None},
+        dim_states=dim_states,
         through={"fact": f2, "dim": d1},
     )
     out["apply_fact_window_sec"] = round(time.time() - t0, 2)
@@ -209,7 +210,8 @@ def run_scale(spark: SparkSession, sf_dir: str, tag: str) -> dict:
     t0 = time.time()
     view.apply(
         None,
-        dim.cdc(begin=d1, end=d2),
+        {"dim": dim.cdc(begin=d1, end=d2)},
+        dim_states=dim_states,
         fact_base=lambda: fact.snapshot(as_of=f2),
         through={"fact": f2, "dim": d2},
     )
@@ -229,7 +231,8 @@ def run_scale(spark: SparkSession, sf_dir: str, tag: str) -> dict:
     t0 = time.time()
     view.apply(
         None,
-        dim.cdc(begin=d2, end=d3),
+        {"dim": dim.cdc(begin=d2, end=d3)},
+        dim_states=dim_states,
         fact_base=lambda: fact.snapshot(as_of=f2).filter(
             F.col("jkb").isin(jkbs) & F.col("jk").isin(changed2)
         ),
